@@ -59,56 +59,13 @@ object AnnStore {
   private def indexPath(path: String, v: Int) = s"$path/v$v/index.json"
   private def codesPath(path: String, v: Int) = s"$path/v$v/codes"
   private def tombsPath(path: String, v: Int) = s"$path/v$v/tombs"
-  private def codesManifestPath(path: String, v: Int) =
-    s"$path/v$v/codes-manifest.json"
 
-  /** `tombs`/`tombCooling` (r14): tombstone-delete generations — see
-    * [[delete]]. Absent keys read as empty, so pre-r14 manifests load
-    * unchanged. */
-  private case class CodesManifest(gens: Seq[String],
-      marks: Map[String, Long], cooling: Map[String, Long],
-      tombs: Seq[String] = Nil,
-      tombCooling: Map[String, Long] = Map.empty)
-
-  private def readCodesManifest(spark: SparkSession, path: String,
-      v: Int): CodesManifest = {
-    // loud upgrade guard: a store created before the manifest-governed
-    // codes layout (flat v<N>/codes/cell=C + _batches markers) has no
-    // manifest — name the situation instead of surfacing a raw
-    // FileNotFoundException from the JSON read
-    require(StoreFiles.fs(spark, path).exists(
-        new org.apache.hadoop.fs.Path(codesManifestPath(path, v))),
-      s"ANN store at $path v$v has no codes manifest — it predates the " +
-        "manifest-governed codes layout (or the manifest was lost); " +
-        "re-create the store or migrate() it from the raw corpus")
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readValue(StoreFiles.readUtf8(spark, codesManifestPath(path, v)),
-        classOf[java.util.Map[String, Any]])
-    require(String.valueOf(root.get("format")) == "graft-ann-codes",
-      s"not an ANN codes manifest at $path v$v")
-    import scala.jdk.CollectionConverters._
-    CodesManifest(
-      root.get("gens").asInstanceOf[java.util.List[Any]].asScala.toSeq
-        .map(String.valueOf),
-      StoreFiles.jsonLongMap(root.get("marks")),
-      StoreFiles.jsonLongMap(root.get("cooling")),
-      // pre-r14 manifests carry no tombstone fields — read as empty
-      Option(root.get("tombs"))
-        .map(_.asInstanceOf[java.util.List[Any]].asScala.toSeq
-          .map(String.valueOf)).getOrElse(Nil),
-      StoreFiles.jsonLongMap(root.get("tombcooling")))
-  }
-
-  private def writeCodesManifest(spark: SparkSession, path: String, v: Int,
-      m: CodesManifest): Unit =
-    StoreFiles.writeUtf8Atomic(spark, codesManifestPath(path, v),
-      s"""{"format":"graft-ann-codes","version":1,""" +
-        s""""gens":[${StoreFiles.jsonStrArr(m.gens)}],""" +
-        s""""marks":{${StoreFiles.jsonLongObj(m.marks)}},""" +
-        s""""cooling":{${StoreFiles.jsonLongObj(m.cooling)}},""" +
-        s""""tombs":[${StoreFiles.jsonStrArr(m.tombs)}],""" +
-        s""""tombcooling":{${StoreFiles.jsonLongObj(m.tombCooling)}}}""")
-
+  /** The codes side of version `v` on the shared [[GenerationLog]];
+    * `tombs` are tombstone-delete generations — see [[delete]]. */
+  private def genLog(path: String, v: Int) = GenerationLog(
+    s"$path/v$v/codes-manifest.json", "graft-ann-codes", 1,
+    s"ANN store at $path v$v", Seq(codesPath(path, v)),
+    Some(tombsPath(path, v)), "graft.ann.gcGraceMs")
 
   /** The live version number named by the pointer. All metadata IO rides
     * the Hadoop FS (r9 review fix) so the store works on local disk,
@@ -136,155 +93,8 @@ object AnnStore {
       s"${codesPath(path, v)}/$gen")
     val wrote = StoreFiles.dataFileCountRecursive(spark,
       s"${codesPath(path, v)}/$gen") > 0
-    writeCodesManifest(spark, path, v, CodesManifest(
-      if (wrote) Seq(gen) else Nil, marks, Map.empty))
-  }
-
-  /** One-time upgrade of a pre-manifest store layout (flat
-    * `v<N>/codes/cell=C` dirs + `_batches` marker files) to
-    * manifest-governed generations: the flat cell dirs move under
-    * `codes/g0/` (pure renames — no code bytes rewritten), the marker
-    * files' per-tag high-water marks fold into the manifest (so
-    * at-least-once re-deliveries of pre-upgrade batches still no-op),
-    * and one manifest write publishes it all. Returns false when the
-    * store already has a manifest (finishing the marker cleanup if a
-    * prior run crashed between manifest and cleanup). Refuses LOUDLY
-    * when the codes layout is not actually legacy — a manifest-governed
-    * store that lost its manifest must be restored or re-created, never
-    * "adopted" (that would drop generations and marks). Idempotent and
-    * crash-resumable: each cell moves DIRECTLY `codes/cell=C` →
-    * `codes/g0/cell=C` with one rename per cell — there is no whole-tree
-    * staging rename whose mid-copy crash could leave a partial-but-
-    * plausible g0 (the r11 layout's `codes-adopting` dir had exactly that
-    * window; a leftover one from a crashed pre-r12 attempt is merged into
-    * g0 first and deleted only AFTER the manifest write, so its presence
-    * always marks an incomplete adoption). Resume contract per cell
-    * (renames are atomic on POSIX/HDFS; object-store connectors
-    * copy-then-delete): when both a source cell and a same-named g0
-    * child exist the trees are COMPARED — a destination containing every
-    * source file at the same length is the complete copy (the crash was
-    * mid-delete; the source remnant is dropped), anything less is a
-    * partial copy cleared before the rename retries. Run under the
-    * single-writer contract (no appends in flight). */
-  def adoptLegacyCodes(spark: SparkSession, path: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val v = currentVersion(spark, path)
-    val f = StoreFiles.fs(spark, path)
-    val batches = new Path(s"$path/_batches")
-    if (f.exists(new Path(codesManifestPath(path, v)))) {
-      // already adopted: finish the steps a crash between the manifest
-      // write and the cleanups could have skipped, then no-op
-      if (f.exists(batches)) f.delete(batches, true): Unit
-      val adopting = new Path(s"$path/v$v/codes-adopting")
-      if (f.exists(adopting)) {
-        // adoption drains staging fully before the manifest write, so a
-        // staging dir beside a manifest can only be the empty husk of the
-        // final cleanup; content here means an inconsistent store
-        require(f.listStatus(adopting).isEmpty,
-          s"ANN store at $path v$v has a manifest AND a non-empty " +
-            "codes-adopting dir — inconsistent adoption state; inspect " +
-            "before serving")
-        f.delete(adopting, true): Unit
-      }
-      return false
-    }
-    val root = new Path(codesPath(path, v))
-    require(f.exists(root), s"ANN store at $path v$v has no codes directory")
-    // the layout must actually BE legacy (flat cell=* dirs, plus at most a
-    // g0 from a crashed prior adoption). Generation-shaped children mean a
-    // NEW-layout store whose manifest was lost — adopting that would
-    // publish only g0 (silently dropping the other generations and every
-    // stream mark) or nest generation dirs inside g0; fail loud instead.
-    f.listStatus(root).foreach { st =>
-      val nm = st.getPath.getName
-      require(nm == "g0" || nm.startsWith("cell=") || nm.startsWith("_") ||
-          nm.startsWith("."),
-        s"ANN store at $path v$v is not the legacy flat-codes layout " +
-          s"(found '$nm' under codes/) — if the codes manifest was LOST " +
-          "from a manifest-governed store, restore it or re-create the " +
-          "store; adoptLegacyCodes must not guess at generations")
-    }
-    val g0 = new Path(root, "g0")
-    val staging = new Path(s"$path/v$v/codes-adopting")
-    f.mkdirs(g0)
-    // a crashed PRE-r12 attempt staged cells under codes-adopting and
-    // published them with one whole-tree rename — whose mid-copy crash
-    // leaves a partial g0 beside the authoritative staging dir. Merge the
-    // staging contents into g0 FIRST: a same-named g0 child is that
-    // partial copy. Cells the old attempt never staged still sit under
-    // codes/ and are handled by the direct-move loop below — which also
-    // reclaims the opposite race (cell both in codes/ and partially in
-    // staging: the codes/ copy is authoritative, staged partial loses).
-    // Resume rule when BOTH a source cell and a same-named g0 child
-    // exist: presence alone cannot distinguish a crash mid-COPY (dst
-    // partial, src complete) from one mid-DELETE (dst complete, src a
-    // partially-deleted remnant) — clobbering dst unconditionally would
-    // silently lose codes in the second case. Compare the trees: if dst
-    // contains every file of src at the same length, dst is the complete
-    // copy and src is the remnant to drop; otherwise dst is the partial
-    // copy to clear before renaming. (Object-store copies are atomic per
-    // object, so a same-length dst file IS the copied file.)
-    def moveIn(src: Path, dst: Path, what: String): Unit = {
-      if (f.exists(dst)) {
-        if (dstCoversSrc(f, src, dst)) { f.delete(src, true); return }
-        f.delete(dst, true): Unit
-      }
-      require(f.rename(src, dst), s"adopt: $what ${src.getName} failed")
-    }
-    if (f.exists(staging)) {
-      f.listStatus(staging).foreach { st =>
-        moveIn(st.getPath, new Path(g0, st.getPath.getName), "staging merge of")
-      }
-    }
-    f.listStatus(root).foreach { st =>
-      val nm = st.getPath.getName
-      // one rename per cell, straight into g0 (a rename into an existing
-      // directory would NEST the source — moveIn clears or skips first)
-      if (nm != "g0" && !nm.startsWith("."))
-        moveIn(st.getPath, new Path(g0, nm), "rename")
-    }
-    // legacy idempotence markers → manifest marks (max batch id per tag)
-    val marks =
-      if (!f.exists(batches)) Map.empty[String, Long]
-      else f.listStatus(batches).toSeq.map(_.getPath.getName)
-        .flatMap { nm =>
-          val i = nm.lastIndexOf("-b")
-          if (i <= 0) None
-          else scala.util.Try(nm.substring(0, i) -> nm.substring(i + 2).toLong)
-            .toOption
-        }
-        .groupBy(_._1).map { case (tag, xs) => tag -> xs.map(_._2).max }
-    val wrote = StoreFiles.dataFileCountRecursive(spark, g0.toString) > 0
-    writeCodesManifest(spark, path, v, CodesManifest(
-      if (wrote) Seq("g0") else Nil, marks, Map.empty))
-    // cleanups AFTER the publish: a still-present staging dir always
-    // marks an adoption whose manifest was never written
-    f.delete(staging, true)
-    f.delete(batches, true)
-    true
-  }
-
-  /** True when every file under `src` also exists under `dst` at the
-    * same relative path and length — i.e. `dst` holds a COMPLETE copy of
-    * `src` (possibly more) and `src` is safe to drop as the remnant of a
-    * crashed post-copy delete. A file `src` compares directly against a
-    * file `dst`. */
-  private def dstCoversSrc(f: org.apache.hadoop.fs.FileSystem,
-      src: org.apache.hadoop.fs.Path,
-      dst: org.apache.hadoop.fs.Path): Boolean = {
-    val srcSt = f.getFileStatus(src)
-    if (srcSt.isFile)
-      return f.exists(dst) && f.getFileStatus(dst).isFile &&
-        f.getFileStatus(dst).getLen == srcSt.getLen
-    val srcUri = src.toUri
-    val it = f.listFiles(src, true)
-    while (it.hasNext) {
-      val s = it.next()
-      val rel = srcUri.relativize(s.getPath.toUri).getPath
-      val d = new org.apache.hadoop.fs.Path(dst, rel)
-      if (!f.exists(d) || f.getFileStatus(d).getLen != s.getLen) return false
-    }
-    true
+    genLog(path, v).write(spark,
+      GenerationLog.Manifest(if (wrote) Seq(gen) else Nil, marks))
   }
 
   /** Create the store at version 1: quantizers + cell-partitioned codes +
@@ -313,7 +123,7 @@ object AnnStore {
     codes(spark, path, currentVersion(spark, path))
 
   private def codes(spark: SparkSession, path: String, v: Int): DataFrame = {
-    val m = readCodesManifest(spark, path, v)
+    val m = genLog(path, v).read(spark)
     require(m.gens.nonEmpty, s"ANN store at $path v$v has no codes")
     // loud serve-time audit: every committed generation must exist
     val f = StoreFiles.fs(spark, path)
@@ -334,7 +144,7 @@ object AnnStore {
     * at any corpus size (a shuffled anti-join on the 100 TB codes side is
     * exactly what deletes must never cost). */
   private def tombstoneFrame(spark: SparkSession, path: String, v: Int,
-      m: CodesManifest): Option[DataFrame] = {
+      m: GenerationLog.Manifest): Option[DataFrame] = {
     if (m.tombs.isEmpty) None
     else {
       val f = StoreFiles.fs(spark, path)
@@ -352,7 +162,7 @@ object AnnStore {
     * verification. */
   def tombstoneCount(spark: SparkSession, path: String): Long = {
     val v = currentVersion(spark, path)
-    tombstoneFrame(spark, path, v, readCodesManifest(spark, path, v))
+    tombstoneFrame(spark, path, v, genLog(path, v).read(spark))
       .fold(0L)(_.count())
   }
 
@@ -417,38 +227,15 @@ object AnnStore {
     }
   }
 
-  /** Thin adapter over [[StoreFiles.commitTombstones]] (r15, verdict #5:
-    * one implementation of the distinct → null-check → cap → flip shape
-    * across all four takedown stores): this store's half is redelivery
-    * detection and the manifest flip; the null check rides the parquet
-    * footers inside the shared write pass — no separate Spark action. */
+  /** Thin adapter over [[GenerationLog.commitTombstones]] (the
+    * distinct → null-check → cap → flip shape shared by all four
+    * takedown stores); the null check rides the parquet footers inside
+    * the shared write pass — no separate Spark action. */
   private def commitTombGen(ids: DataFrame, idCol: String, path: String,
-      stream: Option[(String, Long)]): Long = {
-    val spark = ids.sparkSession
-    val v = currentVersion(spark, path)
-    val m0 = readCodesManifest(spark, path, v)
-    val redelivered = stream.exists { case (tag, id) =>
-      m0.marks.get(tag).exists(id <= _) }
-    if (redelivered) 0L
-    else {
-      val marks = stream.fold(m0.marks) { case (tag, id) =>
-        m0.marks + (tag -> id) }
-      StoreFiles.commitTombstones(
-        ids.select(col(idCol).as("corpus_id")), "corpus_id",
-        tombsPath(path, v), m0.tombs,
-        stream.map { case (tag, id) => s"$tag-b$id" },
-        "graft.ann.maxTombstones", "AnnStore.delete", "compactCodes()") {
-        case Some(gen) =>
-          writeCodesManifest(spark, path, v,
-            m0.copy(tombs = m0.tombs :+ gen, marks = marks))
-        case None =>
-          // an EMPTY streamed batch still advances its mark (else
-          // redelivery would retry forever) but commits no generation
-          if (marks ne m0.marks)
-            writeCodesManifest(spark, path, v, m0.copy(marks = marks))
-      }
-    }
-  }
+      stream: Option[(String, Long)]): Long =
+    genLog(path, currentVersion(ids.sparkSession, path)).commitTombstones(
+      ids.select(col(idCol).as("corpus_id")), "corpus_id", stream,
+      "graft.ann.maxTombstones", "AnnStore.delete", "compactCodes()")
 
   /** The CURRENT manifest's live code-generation directories — what a
     * serve's listing actually reads. A raw directory listing is WRONG
@@ -458,8 +245,7 @@ object AnnStore {
     * and misrepresented pruning for the whole post-compaction tail). */
   def liveCodeGenPaths(spark: SparkSession, path: String): Seq[String] = {
     val v = currentVersion(spark, path)
-    readCodesManifest(spark, path, v).gens
-      .map(g => s"${codesPath(path, v)}/$g")
+    genLog(path, v).read(spark).gens.map(g => s"${codesPath(path, v)}/$g")
   }
 
   /** Data files the CURRENT manifest lists — the store's live footprint
@@ -467,7 +253,7 @@ object AnnStore {
     * orphans and still-cooling superseded generations). */
   def liveCodeFileCount(spark: SparkSession, path: String): Long = {
     val v = currentVersion(spark, path)
-    liveCodeFileCount(spark, path, v, readCodesManifest(spark, path, v))
+    liveCodeFileCount(spark, path, v, genLog(path, v).read(spark))
   }
 
   /** Snapshot-taking twin: the cadence must count files from the SAME
@@ -476,7 +262,7 @@ object AnnStore {
     * version-pointer + manifest read per no-op call (r17 fourth-pass
     * review caught the public-counter call reintroducing both). */
   private def liveCodeFileCount(spark: SparkSession, path: String,
-      v: Int, m: CodesManifest): Long =
+      v: Int, m: GenerationLog.Manifest): Long =
     m.gens.map(g => StoreFiles.dataFileCountRecursive(spark,
       s"${codesPath(path, v)}/$g").toLong).sum
 
@@ -502,37 +288,22 @@ object AnnStore {
   }
 
   /** Migration path for stream tags the (r11-tightened) tag rule no longer
-    * accepts at writer construction — same contract as
-    * [[Retrieval.renameStreamMark]]: moves `oldTag`'s high-water mark to a
-    * rule-valid `newTag` in one atomic manifest write; refuses when the
-    * old mark is absent or the new one already exists. Run under the
-    * single-writer contract. */
+    * accepts at writer construction — [[GenerationLog.renameMark]] on the
+    * current version's codes manifest. Run under the single-writer
+    * contract. */
   def renameStreamMark(spark: SparkSession, path: String,
-      oldTag: String, newTag: String): Unit = {
-    StoreFiles.requireStreamTag(newTag)
-    val v = currentVersion(spark, path)
-    val m = readCodesManifest(spark, path, v)
-    require(m.marks.contains(oldTag),
-      s"no stream mark for '$oldTag' at $path (have: ${m.marks.keys.toSeq.sorted.mkString(", ")})")
-    require(!m.marks.contains(newTag),
-      s"stream mark for '$newTag' already exists at $path — refusing to overwrite")
-    writeCodesManifest(spark, path, v,
-      m.copy(marks = m.marks - oldTag + (newTag -> m.marks(oldTag))))
-  }
+      oldTag: String, newTag: String): Unit =
+    genLog(path, currentVersion(spark, path)).renameMark(spark, oldTag, newTag)
 
   private def commitCodesGen(batch: DataFrame, idCol: String, embCol: String,
       path: String, stream: Option[(String, Long)]): Boolean = {
     val spark = batch.sparkSession
     val v = currentVersion(spark, path)
-    val m0 = readCodesManifest(spark, path, v)
-    val gen = stream match {
-      case Some((tag, id)) =>
-        // replayed batch at/below the committed high-water mark → no-op
-        if (m0.marks.get(tag).exists(id <= _)) return false
-        s"$tag-b$id"
-      case None =>
-        StoreFiles.nextGenName(spark, Seq(codesPath(path, v)), m0.gens)
-    }
+    val lg = genLog(path, v)
+    val m0 = lg.read(spark)
+    // replayed batch at/below the committed high-water mark → no-op
+    if (m0.redelivered(stream)) return false
+    val gen = lg.nextGen(spark, m0, stream)
     val index = AnnIndex.fromJson(
       StoreFiles.readUtf8(spark, indexPath(path, v)))
     val dir = s"${codesPath(path, v)}/$gen"
@@ -540,21 +311,12 @@ object AnnStore {
     // a crashed attempt at this same generation (the manifest never listed
     // it) — the retry reclaims it, so replays can never duplicate codes
     Similarity.encodeAndWritePartitioned(batch, idCol, embCol, index, dir)
-    val wrote = StoreFiles.dataFileCountRecursive(spark, dir) > 0
-    if (!wrote)
+    if (StoreFiles.dataFileCountRecursive(spark, dir) > 0)
+      lg.publish(spark, m0, stream, Some(m0.copy(gens = m0.gens :+ gen)))
+    else {
       StoreFiles.fs(spark, dir).delete(new org.apache.hadoop.fs.Path(dir), true)
-    // an EMPTY batch still advances the stream mark (else its re-delivery
-    // would retry forever) but commits no generation
-    val marks = stream.fold(m0.marks) { case (tag, id) =>
-      m0.marks + (tag -> id) }
-    if (!wrote) {
-      if (marks ne m0.marks)
-        writeCodesManifest(spark, path, v, m0.copy(marks = marks))
-      return false
+      lg.publish(spark, m0, stream, None)
     }
-    writeCodesManifest(spark, path, v,
-      m0.copy(gens = m0.gens :+ gen, marks = marks))
-    true
   }
 
   /** Serve a query batch from the current version (partition-pruned —
@@ -607,7 +369,7 @@ object AnnStore {
     // the recall number that gates the re-train alert)
     val spark = corpus.sparkSession
     val v = currentVersion(spark, path)
-    val m = readCodesManifest(spark, path, v)
+    val m = genLog(path, v).read(spark)
     val ann = servePinned(path, v, corpus, corpusId, corpusEmb,
         sampleQueries, queryId, queryEmb, k, nProbe, refineFactor)
       .select("query_id", "corpus_id")
@@ -694,7 +456,7 @@ object AnnStore {
       maxGens: Int = 16, maxLiveFiles: Long = 512,
       maxTombstoneRows: Long = -1L): Boolean = {
     val v = currentVersion(spark, path)
-    val m = readCodesManifest(spark, path, v)
+    val m = genLog(path, v).read(spark)
     def liveFiles = liveCodeFileCount(spark, path, v, m)
     // r17 (advice): a manifest-listed tombstone generation missing on
     // disk refuses loudly (shared helper — mapping it to 0 rows would
@@ -720,21 +482,16 @@ object AnnStore {
     * back-to-back compactions with lock-free in-flight serves. */
   def compactCodes(spark: SparkSession, path: String): Unit = {
     val v = currentVersion(spark, path)
-    val m = readCodesManifest(spark, path, v)
+    val lg = genLog(path, v)
+    val m = lg.read(spark)
     if (m.gens.isEmpty) {
-      // EMPTIED store (a prior full-tombstone compaction): the shared
-      // retire step drains live tombstones + cooling grace copies —
-      // see StoreFiles.retireEmptiedStore
-      StoreFiles.retireEmptiedStore(spark, "graft.ann.gcGraceMs",
-        m.cooling, m.tombs, m.tombCooling,
-        Seq(codesPath(path, v)), tombsPath(path, v)) { (c, tc) =>
-        writeCodesManifest(spark, path, v,
-          m.copy(cooling = c, tombs = Nil, tombCooling = tc))
-      }
+      // EMPTIED store (a prior full-tombstone compaction): drain live
+      // tombstones + cooling grace copies
+      lg.retireEmptied(spark, m)
       return
     }
     val root = codesPath(path, v)
-    val gen = StoreFiles.nextGenName(spark, Seq(root), m.gens)
+    val gen = lg.nextGen(spark, m, None)
     import org.apache.spark.sql.functions.col
     val union = m.gens.map(g => spark.read.parquet(s"$root/$g"))
       .reduce(_.unionByName(_))
@@ -756,20 +513,7 @@ object AnnStore {
     val emptied = StoreFiles.parquetRowsWritten(spark, s"$root/$gen") <= 0L
     if (emptied) StoreFiles.fs(spark, s"$root/$gen")
       .delete(new org.apache.hadoop.fs.Path(s"$root/$gen"), true)
-    val graceMs = spark.conf.getOption("graft.ann.gcGraceMs")
-      .map(_.toLong).getOrElse(15L * 60 * 1000)
-    val now = System.currentTimeMillis()
-    val (cooling, keep) = StoreFiles.coolingStep(m.cooling, m.gens.toSet,
-      gen, graceMs, now)
-    // retired tombstone generations cool under the same grace window
-    // (`gen` names a codes generation — it never exists under tombs/, so
-    // carrying it in the keep-set is harmless)
-    val (tombCooling, keepT) = StoreFiles.coolingStep(m.tombCooling,
-      m.tombs.toSet, gen, graceMs, now)
-    writeCodesManifest(spark, path, v, CodesManifest(
-      if (emptied) Nil else Seq(gen), m.marks, cooling, Nil, tombCooling))
-    StoreFiles.sweepGenerations(spark, root, keep)
-    StoreFiles.sweepGenerations(spark, tombsPath(path, v), keepT)
+    lg.compact(spark, m, if (emptied) None else Some(gen))(identity)
   }
 
   /** Delete all non-current version directories — run once migrated
@@ -800,8 +544,8 @@ object AnnStore {
     // tombstones from the re-encode, so a migration cannot resurrect
     // taken-down ids even when the caller's raw corpus still holds them.
     // The new version starts tombstone-free (they are now physical).
-    val liveCorpus = tombstoneFrame(spark, path, cur,
-        readCodesManifest(spark, path, cur)).fold(corpus) { t =>
+    val m = genLog(path, cur).read(spark)
+    val liveCorpus = tombstoneFrame(spark, path, cur, m).fold(corpus) { t =>
       corpus.join(broadcast(t.withColumnRenamed("corpus_id", idCol)),
         Seq(idCol), "left_anti") }
     val next = cur + 1
@@ -811,7 +555,7 @@ object AnnStore {
     // duplicate top-k candidates; the corpus handed to migrate already
     // contains those rows, so the replay must keep no-opping)
     writeVersion(liveCorpus, idCol, embCol, newIndex, path, next,
-      marks = readCodesManifest(spark, path, cur).marks)
+      marks = m.marks)
     writePointer(spark, path, next)
     next
   }

@@ -888,12 +888,15 @@ object Dedup {
     // and never to re-trust the caller's frame, so the band-row source
     // depends on the attempt:
     //  - FRESH attempt (no shingles generation yet): the shingle frame
-    //    is pinned with a lazy localCheckpoint — all three staging jobs
-    //    read the SAME materialized blocks, and a lost block FAILS the
-    //    job loudly (checkpoint blocks are not recomputable) instead of
-    //    silently recomputing from a possibly nondeterministic caller
-    //    frame. Deterministic-or-loud; the loud path's retry lands in
-    //    this function's own resume branch.
+    //    is pinned with an EAGER localCheckpoint — it materializes in
+    //    one job BEFORE the concurrent wave, so all three staging jobs
+    //    read the SAME blocks (a lazy checkpoint would let each
+    //    concurrent write compute the caller's frame itself, and on a
+    //    multi-executor cluster a nondeterministic caller frame could
+    //    publish shingles and rows that disagree). A lost block FAILS
+    //    the job loudly (checkpoint blocks are not recomputable) instead
+    //    of silently recomputing. Deterministic-or-loud; the loud path's
+    //    retry lands in this function's own resume branch.
     //  - RESUME (shingles generation visible): the source is the
     //    written generation, exactly as before — only the missing
     //    tables stage and publish.
@@ -909,7 +912,7 @@ object Dedup {
     val src =
       if (shVisible) spark.read.parquet(s"$path/shingles/$gen")
       else batch.select(q(idCol).as("id"),
-        shingles(q(textCol), shingleK).as("sh")).localCheckpoint(false)
+        shingles(q(textCol), shingleK).as("sh")).localCheckpoint(true)
     try {
       val rows = src
         .withColumn("sig", minhashSignature(col("sh"), numHashes))
@@ -1093,7 +1096,7 @@ object Dedup {
     val liveRows = math.max(0L,
       StoreFiles.parquetRowsWritten(spark, s"$path/tombs"))
     StoreFiles.commitTombstones(ids.select(q(idCol).as("id")), "id",
-      s"$path/tombs", Nil, stream.map { case (tag, id) => s"$tag-b$id" },
+      s"$path/tombs", Nil, GenerationLog.streamGen(stream),
       "graft.minhash.maxTombstones",
       "retractFromMinHashStore", "compactMinHashStore",
       extraLiveRows = liveRows)(_ => ())

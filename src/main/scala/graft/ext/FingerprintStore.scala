@@ -13,8 +13,7 @@ import org.apache.spark.util.sketch.BloomFilter
   *                     (expectedItems, fpp), committed fps GENERATIONS,
   *                     per-stream high-water marks, cooling ledger —
   *                     replaced atomically, so every crash window leaves a
-  *                     servable store (r12: unified on the BM25/ANN
-  *                     manifest mechanics, replacing the v1 swap layout),
+  *                     servable store (the shared [[GenerationLog]]),
   *   - `fps/<gen>/`    parquet of distinct 64-bit normalized-text
   *                     fingerprints (the exact membership set — 8
   *                     bytes/doc, ~0.1% of corpus text bytes), one
@@ -45,62 +44,20 @@ object FingerprintStore {
   private def fp(textCol: String) =
     TextAnalysis.fingerprint64(col("`" + textCol.replace("`", "``") + "`"))
 
-  private def manifestPath(path: String) = s"$path/manifest.json"
   private def bloomPath(path: String) = s"$path/bloom.bin"
   private def fpsRoot(path: String) = s"$path/fps"
   private def genPath(path: String, gen: String) = s"$path/fps/$gen"
 
-  /** `tombs`/`tombCooling` (r14): retraction generations — see
-    * [[retract]]. Absent keys read as empty, so pre-r14 manifests load
-    * unchanged. */
-  private case class FpManifest(expectedItems: Long, fpp: Double,
-      gens: Seq[String], marks: Map[String, Long],
-      cooling: Map[String, Long], tombs: Seq[String] = Nil,
-      tombCooling: Map[String, Long] = Map.empty)
-
-  private def readManifest(spark: SparkSession, path: String): FpManifest = {
-    val f = StoreFiles.fs(spark, path)
-    val mp = new org.apache.hadoop.fs.Path(manifestPath(path))
-    if (!f.exists(mp) &&
-        f.exists(new org.apache.hadoop.fs.Path(s"$path/meta.json")))
-      throw new IllegalArgumentException(
-        s"fingerprint store at $path predates the manifest layout — " +
-          "run FingerprintStore.adoptLegacy to upgrade in place")
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readValue(StoreFiles.readUtf8(spark, manifestPath(path)),
-        classOf[java.util.Map[String, Any]])
-    require(String.valueOf(root.get("format")) == "graft-fingerprint-store",
-      s"not a fingerprint store at $path")
-    import scala.jdk.CollectionConverters._
-    FpManifest(
-      root.get("expected_items").asInstanceOf[Number].longValue(),
-      root.get("fpp").asInstanceOf[Number].doubleValue(),
-      root.get("gens").asInstanceOf[java.util.List[Any]].asScala.toSeq
-        .map(String.valueOf),
-      StoreFiles.jsonLongMap(root.get("marks")),
-      StoreFiles.jsonLongMap(root.get("cooling")),
-      // pre-r14 manifests carry no retraction fields — read as empty
-      Option(root.get("tombs"))
-        .map(_.asInstanceOf[java.util.List[Any]].asScala.toSeq
-          .map(String.valueOf)).getOrElse(Nil),
-      StoreFiles.jsonLongMap(root.get("tombcooling")))
-  }
-
-  private def writeManifest(spark: SparkSession, path: String,
-      m: FpManifest): Unit =
-    StoreFiles.writeUtf8Atomic(spark, manifestPath(path),
-      s"""{"format":"graft-fingerprint-store","version":2,""" +
-        s""""expected_items":${m.expectedItems},"fpp":${m.fpp},""" +
-        s""""gens":[${StoreFiles.jsonStrArr(m.gens)}],""" +
-        s""""marks":{${StoreFiles.jsonLongObj(m.marks)}},""" +
-        s""""cooling":{${StoreFiles.jsonLongObj(m.cooling)}},""" +
-        s""""tombs":[${StoreFiles.jsonStrArr(m.tombs)}],""" +
-        s""""tombcooling":{${StoreFiles.jsonLongObj(m.tombCooling)}}}""")
+  /** Payload keys `expected_items` / `fpp` (the filter geometry);
+    * `tombs` are retraction generations — see [[retract]]. */
+  private def genLog(path: String) = GenerationLog(s"$path/manifest.json",
+    "graft-fingerprint-store", 2, s"fingerprint store at $path",
+    Seq(fpsRoot(path)), Some(s"$path/tombs"), "graft.fpstore.gcGraceMs")
 
   /** The committed fingerprints: the union of the committed generations
     * (retractions NOT yet applied — see [[liveFps]]). */
   private def fpsDf(spark: SparkSession, path: String,
-      m: FpManifest): DataFrame = {
+      m: GenerationLog.Manifest): DataFrame = {
     require(m.gens.nonEmpty, s"fingerprint store at $path has no fps")
     m.gens.map(g => spark.read.parquet(genPath(path, g)))
       .reduce(_.unionByName(_))
@@ -110,7 +67,7 @@ object FingerprintStore {
     * when the store has none. Broadcast-small by contract (enforced at
     * [[retract]]). */
   private def tombstoneFps(spark: SparkSession, path: String,
-      m: FpManifest): Option[DataFrame] = {
+      m: GenerationLog.Manifest): Option[DataFrame] = {
     if (m.tombs.isEmpty) None
     else {
       val f = StoreFiles.fs(spark, path)
@@ -125,7 +82,7 @@ object FingerprintStore {
   /** The live membership set: committed fingerprints minus live
     * retractions — what every scrub confirms against. */
   private def liveFps(spark: SparkSession, path: String,
-      m: FpManifest): DataFrame = {
+      m: GenerationLog.Manifest): DataFrame = {
     val base = fpsDf(spark, path, m)
     tombstoneFps(spark, path, m).fold(base) { t =>
       base.join(broadcast(t), Seq("fp"), "left_anti") }
@@ -134,8 +91,7 @@ object FingerprintStore {
   /** Number of live retracted fingerprints (0 after [[compact]] retires
     * them) — the audit counter for retraction verification. */
   def retractionCount(spark: SparkSession, path: String): Long = {
-    val m = readManifest(spark, path)
-    tombstoneFps(spark, path, m).fold(0L)(_.count())
+    tombstoneFps(spark, path, genLog(path).read(spark)).fold(0L)(_.count())
   }
 
   /** Retract documents' membership from the store — the takedown path
@@ -204,33 +160,14 @@ object FingerprintStore {
 
   private def commitRetraction(docs: DataFrame, textCol: String,
       path: String, stream: Option[(String, Long)]): Long = {
-    val spark = docs.sparkSession
-    val m0 = readManifest(spark, path)
-    val redelivered = stream.exists { case (tag, id) =>
-      m0.marks.get(tag).exists(id <= _) }
-    if (redelivered) return 0L
-    val marks = stream.fold(m0.marks) { case (tag, id) =>
-      m0.marks + (tag -> id) }
     // a null text must surface as a null fp for the shared null check:
     // xxhash64 hashes a null input to the SEED (non-null 42), which would
     // silently retract a phantom fingerprint instead of refusing
     val tcol = col("`" + textCol.replace("`", "``") + "`")
     val fps = docs.select(when(tcol.isNull, lit(null).cast("long"))
       .otherwise(fp(textCol)).as("fp"))
-    StoreFiles.commitTombstones(
-      fps, "fp", s"$path/tombs", m0.tombs,
-      stream.map { case (tag, id) => s"$tag-b$id" },
-      "graft.fpstore.maxTombstones", "FingerprintStore.retract",
-      "compact()") {
-      case Some(gen) =>
-        writeManifest(spark, path,
-          m0.copy(tombs = m0.tombs :+ gen, marks = marks))
-      case None =>
-        // an EMPTY streamed batch still advances its mark (else the
-        // redelivery would retry forever) but commits no generation
-        if (marks ne m0.marks)
-          writeManifest(spark, path, m0.copy(marks = marks))
-    }
+    genLog(path).commitTombstones(fps, "fp", stream,
+      "graft.fpstore.maxTombstones", "FingerprintStore.retract", "compact()")
   }
 
   /** Build the store from a corpus: one scan to distinct fingerprints
@@ -242,26 +179,23 @@ object FingerprintStore {
       expectedItems: Long = 0L, fpp: Double = 0.01): Unit = {
     val spark = corpus.sparkSession
     val f = StoreFiles.fs(spark, path)
-    require(!f.exists(new org.apache.hadoop.fs.Path(manifestPath(path))),
+    require(!genLog(path).exists(spark),
       s"fingerprint store already exists at $path")
-    // a v1 store (meta.json / flat fps files) must not be silently
-    // SHADOWED by a fresh build — its membership would vanish from every
-    // future scrub with no error anywhere
-    if (f.exists(new org.apache.hadoop.fs.Path(s"$path/meta.json")))
-      throw new IllegalArgumentException(
-        s"fingerprint store at $path predates the manifest layout — " +
-          "run FingerprintStore.adoptLegacy to upgrade in place")
+    // fps data without a manifest (a pre-manifest store, or a lost
+    // manifest) must not be silently SHADOWED by a fresh build — its
+    // membership would vanish from every future scrub with no error
     require(!f.exists(new org.apache.hadoop.fs.Path(fpsRoot(path))),
-      s"$path already holds fps data without a manifest — adopt or " +
-        "remove it before building")
+      s"$path already holds fps data without a manifest (a pre-manifest " +
+        "layout, which is not supported, or a lost manifest) — remove it " +
+        "before building")
     val fps = corpus.select(fp(textCol).as("fp")).distinct()
     fps.write.mode("errorifexists").parquet(genPath(path, "g0"))
     val stored = spark.read.parquet(genPath(path, "g0"))
     val n = stored.count()
     val items = if (expectedItems > 0) expectedItems else math.max(4L * n, 1024L)
     writeBloomAtomic(spark, stored.stat.bloomFilter("fp", items, fpp), path)
-    writeManifest(spark, path,
-      FpManifest(items, fpp, Seq("g0"), Map.empty, Map.empty))
+    genLog(path).write(spark, GenerationLog.Manifest(Seq("g0"))
+      .set("expected_items" -> items, "fpp" -> fpp))
   }
 
   /** Append a batch: its NEW distinct fingerprints land as one committed
@@ -290,14 +224,10 @@ object FingerprintStore {
   private def commitGen(batch: DataFrame, textCol: String, path: String,
       stream: Option[(String, Long)]): Boolean = {
     val spark = batch.sparkSession
-    val m0 = readManifest(spark, path)
-    val gen = stream match {
-      case Some((tag, id)) =>
-        // replayed batch at/below the committed high-water mark → no-op
-        if (m0.marks.get(tag).exists(id <= _)) return false
-        s"$tag-b$id"
-      case None => StoreFiles.nextGenName(spark, Seq(fpsRoot(path)), m0.gens)
-    }
+    val lg = genLog(path)
+    val m0 = lg.read(spark)
+    if (m0.redelivered(stream)) return false
+    val gen = lg.nextGen(spark, m0, stream)
     val fresh = batch.select(fp(textCol).as("fp")).distinct()
       .join(fpsDf(spark, path, m0), Seq("fp"), "left_anti")
     // overwrite, not errorifexists: the target is either fresh or an
@@ -310,23 +240,17 @@ object FingerprintStore {
       if (StoreFiles.dataFileCountRecursive(spark, genPath(path, gen)) > 0)
         Some(spark.read.parquet(genPath(path, gen)))
       else None
-    val wrote = genDf.exists(!_.isEmpty)
-    // an EMPTY increment still advances the stream mark (else its
-    // re-delivery would retry forever) but commits no generation
-    val marks = stream.fold(m0.marks) { case (tag, id) =>
-      m0.marks + (tag -> id) }
-    if (!wrote) {
+    if (!genDf.exists(!_.isEmpty)) {
       StoreFiles.fs(spark, path).delete(
         new org.apache.hadoop.fs.Path(genPath(path, gen)), true)
-      if (marks ne m0.marks) writeManifest(spark, path, m0.copy(marks = marks))
-      return false
+      return lg.publish(spark, m0, stream, None)
     }
     // bloom BEFORE manifest: a crash between leaves a superset filter
     // (correct); the gen dir itself is invisible until the manifest flip
-    val inc = genDf.get.stat.bloomFilter("fp", m0.expectedItems, m0.fpp)
+    val inc = genDf.get.stat.bloomFilter("fp", m0.long("expected_items"),
+      m0.double("fpp"))
     writeBloomAtomic(spark, loadBloom(spark, path).mergeInPlace(inc), path)
-    writeManifest(spark, path, m0.copy(gens = m0.gens :+ gen, marks = marks))
-    true
+    lg.publish(spark, m0, stream, Some(m0.copy(gens = m0.gens :+ gen)))
   }
 
   /** Scrub a batch against the store: drop every row whose normalized
@@ -335,7 +259,7 @@ object FingerprintStore {
     * stored fingerprints (batch-bounded broadcast both ways). */
   def scrub(incoming: DataFrame, textCol: String, path: String): DataFrame = {
     val spark = incoming.sparkSession
-    val m = readManifest(spark, path)
+    val m = genLog(path).read(spark)
     val bc = spark.sparkContext.broadcast(loadBloom(spark, path))
     val fpIn = fp(textCol)
     // native codegen'd probe (r9): the prefilter sits on the full-width
@@ -363,7 +287,7 @@ object FingerprintStore {
       sink: (DataFrame, Long) => Unit):
       org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
     val spark = stream.sparkSession
-    readManifest(spark, path): Unit // fail at construction, not batch 0
+    genLog(path).read(spark): Unit // fail at construction, not batch 0
     val bc = spark.sparkContext.broadcast(loadBloom(spark, path))
     stream.writeStream.foreachBatch { (batch: DataFrame, id: Long) =>
       // manifest re-read PER BATCH (r12 review): compactions sweep the
@@ -373,7 +297,7 @@ object FingerprintStore {
       // binary loaded once): a bloom miss short-circuits, so membership
       // appended after the writer started is not scrubbed until restart —
       // compaction, by contrast, is membership-preserving and transparent.
-      val m = readManifest(spark, path)
+      val m = genLog(path).read(spark)
       val fpIn = fp(textCol)
       val maybe = batch
         .filter(graft.functions.BloomMightContain(bc, fpIn))
@@ -419,14 +343,14 @@ object FingerprintStore {
     * (compaction gates assert on this; raw directory walks also see
     * crash orphans and still-cooling superseded generations). */
   def liveFileCount(spark: SparkSession, path: String): Long =
-    liveFileCount(spark, path, readManifest(spark, path))
+    liveFileCount(spark, path, genLog(path).read(spark))
 
   /** Snapshot-taking twin — the cadence counts from the SAME manifest
     * read its other legs use (r17 fourth-pass review: the sibling
     * cadences had solved the one-read-vs-one-implementation tension in
     * opposite ways; this shape gives both). */
   private def liveFileCount(spark: SparkSession, path: String,
-      m: FpManifest): Long =
+      m: GenerationLog.Manifest): Long =
     m.gens.map(g =>
       StoreFiles.dataFileCountRecursive(spark, genPath(path, g)).toLong).sum
 
@@ -447,7 +371,7 @@ object FingerprintStore {
   def compactIfNeeded(spark: SparkSession, path: String,
       maxGens: Int = 16, maxLiveFiles: Long = 512,
       maxTombstoneRows: Long = -1L): Boolean = {
-    val m = readManifest(spark, path)
+    val m = genLog(path).read(spark)
     def liveFiles = liveFileCount(spark, path, m)
     def tombRows = StoreFiles.committedTombstoneRows(spark,
       s"$path/tombs", m.tombs, "compactIfNeeded")
@@ -475,14 +399,16 @@ object FingerprintStore {
     * (never in any manifest) delete immediately. Stream marks survive. */
   def compact(spark: SparkSession, path: String, targetFiles: Int = 0,
       expectedItems: Long = 0L, fpp: Double = 0.0): Unit = {
-    val m0 = readManifest(spark, path)
-    val nItems = if (expectedItems > 0) expectedItems else m0.expectedItems
-    val nFpp = if (fpp > 0) fpp else m0.fpp
+    val lg = genLog(path)
+    val m0 = lg.read(spark)
+    val nItems = if (expectedItems > 0) expectedItems
+      else m0.long("expected_items")
+    val nFpp = if (fpp > 0) fpp else m0.double("fpp")
     val liveBytes = m0.gens.map(g =>
       StoreFiles.dataBytesRecursive(spark, genPath(path, g))).sum
     val nf = if (targetFiles > 0) targetFiles
       else StoreFiles.targetFileCount(liveBytes)
-    val gen = StoreFiles.nextGenName(spark, Seq(fpsRoot(path)), m0.gens)
+    val gen = lg.nextGen(spark, m0, None)
     // distinct is a no-op by the append contract (anti-joined before
     // write) — kept as cheap insurance so a crashed half-append can
     // never make compaction amplify duplicates. repartition, not
@@ -512,71 +438,9 @@ object FingerprintStore {
       } else spark.read.parquet(genPath(path, gen))
         .stat.bloomFilter("fp", nItems, nFpp)
     writeBloomAtomic(spark, bloom, path)
-    val graceMs = spark.conf.getOption("graft.fpstore.gcGraceMs")
-      .map(_.toLong).getOrElse(15L * 60 * 1000)
-    val now = System.currentTimeMillis()
-    val (cooling, keep) = StoreFiles.coolingStep(m0.cooling, m0.gens.toSet,
-      gen, graceMs, now)
     // retired retraction generations cool under the same grace window
-    val (tombCooling, keepT) = StoreFiles.coolingStep(m0.tombCooling,
-      m0.tombs.toSet, gen, graceMs, now)
-    writeManifest(spark, path, m0.copy(expectedItems = nItems, fpp = nFpp,
-      gens = if (emptied) Nil else Seq(gen), cooling = cooling,
-      tombs = Nil, tombCooling = tombCooling))
-    StoreFiles.sweepGenerations(spark, fpsRoot(path), keep)
-    StoreFiles.sweepGenerations(spark, s"$path/tombs", keepT)
-  }
-
-  /** One-time upgrade of a v1 (pre-manifest) store — flat parquet files
-    * under `fps/` + `meta.json` + `bloom.bin` — to the manifest layout: the flat fps
-    * files move under `fps/g0/` (pure renames; a same-named destination
-    * file at the same length is a completed copy whose source remnant is
-    * dropped, mirroring [[AnnStore.adoptLegacyCodes]]'s resume contract),
-    * the meta geometry folds into the manifest, and one manifest write
-    * publishes it. Returns false when the store already has a manifest
-    * (finishing the meta cleanup if a prior run crashed after the
-    * publish). Idempotent; run under the single-writer contract. */
-  def adoptLegacy(spark: SparkSession, path: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val f = StoreFiles.fs(spark, path)
-    val meta = new Path(s"$path/meta.json")
-    if (f.exists(new Path(manifestPath(path)))) {
-      if (f.exists(meta)) f.delete(meta, false): Unit
-      return false
-    }
-    require(f.exists(meta), s"no fingerprint store (v1 or v2) at $path")
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readValue(StoreFiles.readUtf8(spark, meta.toString),
-        classOf[java.util.Map[String, Any]])
-    require(String.valueOf(root.get("format")) == "graft-fingerprint-store",
-      s"not a fingerprint store at $path")
-    val items = root.get("expected_items").asInstanceOf[Number].longValue()
-    val legacyFpp = root.get("fpp").asInstanceOf[Number].doubleValue()
-    // a v1 deployment that died inside compact's swapDir window left
-    // fps/ renamed aside as fps.old — restore it first so the documented
-    // v1 "re-run compact to heal" contract survives the upgrade
-    StoreFiles.healDir(spark, fpsRoot(path))
-    val rootP = new Path(fpsRoot(path))
-    require(f.exists(rootP), s"fingerprint store at $path has no fps directory")
-    // the layout must actually BE legacy: flat files plus at most a g0
-    // from a crashed prior adoption. Other generation-shaped children
-    // mean a MANIFEST-governed store whose manifest was lost — adopting
-    // that would publish only g0, silently dropping the rest and every
-    // stream mark; fail loud instead (the AnnStore adoption contract)
-    f.listStatus(rootP).foreach { st =>
-      val nm = st.getPath.getName
-      require(st.isFile || nm == "g0" || nm.startsWith(".") ||
-          nm.startsWith("_"),
-        s"fingerprint store at $path is not the legacy flat layout " +
-          s"(found directory '$nm' under fps/) — if the manifest was " +
-          "LOST from a manifest-governed store, restore it or re-create " +
-          "the store; adoptLegacy must not guess at generations")
-    }
-    StoreFiles.adoptFlatFilesInto(f, rootP, new Path(rootP, "g0"), _ => false)
-    writeManifest(spark, path,
-      FpManifest(items, legacyFpp, Seq("g0"), Map.empty, Map.empty))
-    f.delete(meta, false)
-    true
+    lg.compact(spark, m0, if (emptied) None else Some(gen))(
+      _.set("expected_items" -> nItems, "fpp" -> nFpp))
   }
 
   def loadBloom(spark: SparkSession, path: String): BloomFilter = {

@@ -146,8 +146,9 @@ object Retrieval {
   // query batch is served from the store without touching corpus text.
   //
   // v2 layout — generational, manifest-governed, bucket-partitioned:
-  //   manifest.json        {n_docs, n_dl, sum_dl, n_buckets,
-  //                         gens[], pgens[], tags[]}
+  //   manifest.json        {n_docs, n_dl, sum_dl, n_buckets, pgens[],
+  //                         gens[], marks{}, cooling{}, tombs[], …}
+  //                         (the shared GenerationLog protocol)
   //   postings/<gen>/tbucket=B/…   (token, doc_id, tf, dl)
   //   dfd/<gen>/tbucket=B/…        (token, df) document-frequency DELTAS
   //                                (appends add delta rows; serves sum
@@ -176,71 +177,26 @@ object Retrieval {
   //     dirs no reader ever lists — there is NO window where committed
   //     postings can pair with stale df/counters, and no window where the
   //     store is unreadable.
-  //   - GC is DEFERRED one compaction: compact() deletes crash orphans
-  //     immediately (never visible to any reader) but leaves the
-  //     generations it just superseded on disk until the NEXT compact()
-  //     sweeps them, so lock-free serves planned against the previous
-  //     manifest keep their files for a whole inter-compaction window.
+  //   - GC is DEFERRED by the cooling ledger: compact() deletes crash
+  //     orphans immediately (never visible to any reader) but keeps the
+  //     generations it supersedes on disk for `graft.bm25.gcGraceMs`, so
+  //     lock-free serves planned against an older manifest keep their
+  //     files.
   //   - single-writer contract (like every store in the family): appends/
   //     compactions are serialized by the caller; serves are lock-free.
 
-  /** `tombs`/`tombCooling` (r14): tombstone-delete generations — see
-    * [[deleteDocs]]. Absent keys read as empty, so pre-r14 manifests load
-    * unchanged. */
-  private case class BmManifest(nDocs: Long, nDl: Long, sumDl: Double,
-      nBuckets: Int, gens: Seq[String], pgens: Seq[String],
-      marks: Map[String, Long], cooling: Map[String, Long] = Map.empty,
-      tombs: Seq[String] = Nil, tombCooling: Map[String, Long] = Map.empty)
+  private val sides = Seq("postings", "dlen", "dfd")
 
-  private def manifestPath(path: String) = s"$path/manifest.json"
-
-  private def readManifest(spark: SparkSession, path: String): BmManifest = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readValue(StoreFiles.readUtf8(spark, manifestPath(path)),
-        classOf[java.util.Map[String, Any]])
-    require(String.valueOf(root.get("format")) == "graft-bm25-index",
-      s"not a BM25 index at $path")
-    import scala.jdk.CollectionConverters._
-    def strs(k: String): Seq[String] =
-      root.get(k).asInstanceOf[java.util.List[Any]].asScala.toSeq
-        .map(String.valueOf)
-    BmManifest(
-      root.get("n_docs").asInstanceOf[Number].longValue(),
-      root.get("n_dl").asInstanceOf[Number].longValue(),
-      root.get("sum_dl").asInstanceOf[Number].doubleValue(),
-      root.get("n_buckets").asInstanceOf[Number].intValue(),
-      strs("gens"), strs("pgens"),
-      StoreFiles.jsonLongMap(root.get("marks")),
-      StoreFiles.jsonLongMap(root.get("cooling")),
-      // pre-r14 manifests carry no tombstone fields — read as empty
-      if (root.get("tombs") == null) Nil else strs("tombs"),
-      StoreFiles.jsonLongMap(root.get("tombcooling")))
-  }
-
-  private def writeManifest(spark: SparkSession, path: String,
-      m: BmManifest): Unit =
-    StoreFiles.writeUtf8Atomic(spark, manifestPath(path),
-      s"""{"format":"graft-bm25-index","version":2,"n_docs":${m.nDocs},""" +
-        s""""n_dl":${m.nDl},"sum_dl":${m.sumDl},"n_buckets":${m.nBuckets},""" +
-        s""""gens":[${StoreFiles.jsonStrArr(m.gens)}],""" +
-        s""""pgens":[${StoreFiles.jsonStrArr(m.pgens)}],""" +
-        s""""marks":{${StoreFiles.jsonLongObj(m.marks)}},""" +
-        s""""cooling":{${StoreFiles.jsonLongObj(m.cooling)}},""" +
-        s""""tombs":[${StoreFiles.jsonStrArr(m.tombs)}],""" +
-        s""""tombcooling":{${StoreFiles.jsonLongObj(m.tombCooling)}}}""")
+  /** Payload keys: the counters `n_docs` / `n_dl` / `sum_dl`, the fixed
+    * `n_buckets`, and `pgens`; `tombs` are tombstone-delete generations
+    * — see [[deleteDocs]]. */
+  private def genLog(path: String) = GenerationLog(s"$path/manifest.json",
+    "graft-bm25-index", 2, s"BM25 index at $path",
+    sides.map(side => s"$path/$side"), Some(s"$path/tombs"),
+    "graft.bm25.gcGraceMs")
 
   private def bucketOf(token: Column, nBuckets: Int): Column =
     pmod(xxhash64(token), lit(nBuckets.toLong)).cast("int")
-
-  private val sides = Seq("postings", "dlen", "dfd")
-
-  /** Next compaction/append generation name: numeric g-names only, strictly
-    * above both the committed gens AND anything on disk (a crashed append's
-    * orphan dir must never be adopted by a later writer). Streaming appends
-    * use caller-tagged names instead — see [[indexAppendWriter]]. */
-  private def nextGenName(spark: SparkSession, path: String,
-      committed: Seq[String]): String =
-    StoreFiles.nextGenName(spark, sides.map(s => s"$path/$s"), committed)
 
   /** Read one side across the given generations: one scan per generation
     * root unioned (Spark refuses differing multi-root partition layouts in
@@ -257,9 +213,9 @@ object Retrieval {
     * (compaction gates assert on this; raw directory walks also see crash
     * orphans and the one-compaction grace window of superseded gens). */
   def liveFileCount(spark: SparkSession, path: String): Long = {
-    val m = readManifest(spark, path)
+    val m = genLog(path).read(spark)
     (m.gens.map(g => requireGenFiles(spark, path, "dlen", g)) ++
-      m.pgens.flatMap(g => Seq(
+      m.strs("pgens").flatMap(g => Seq(
         requireGenFiles(spark, path, "postings", g),
         requireGenFiles(spark, path, "dfd", g)))).sum
   }
@@ -359,14 +315,13 @@ object Retrieval {
       path: String, nBuckets: Int = 32): Unit = {
     require(nBuckets >= 1, "nBuckets >= 1")
     val spark = docs.sparkSession
-    require(!StoreFiles.fs(spark, path)
-        .exists(new Path(manifestPath(path))),
-      s"BM25 index already exists at $path")
+    val lg = genLog(path)
+    require(!lg.exists(spark), s"BM25 index already exists at $path")
     val gen = "g0"
     val (n, nDl, sd, hasP) = writeGen(docs, idCol, textCol, path, gen, nBuckets)
-    writeManifest(spark, path, BmManifest(n, nDl, sd, nBuckets,
-      if (n == 0L) Nil else Seq(gen),
-      if (hasP) Seq(gen) else Nil, Map.empty))
+    lg.write(spark, GenerationLog.Manifest(if (n == 0L) Nil else Seq(gen))
+      .set("n_docs" -> n, "n_dl" -> nDl, "sum_dl" -> sd,
+        "n_buckets" -> nBuckets, "pgens" -> (if (hasP) Seq(gen) else Nil)))
   }
 
   /** Append a crawl batch (ids must be new): write the batch's generation
@@ -398,57 +353,33 @@ object Retrieval {
   }
 
   /** Migration path for stream tags the (r11-tightened) tag rule no longer
-    * accepts at writer construction: the pre-r11 rule allowed tags starting
-    * with '_' or '.', whose high-water marks may still sit in upgraded
-    * manifests. Moves `oldTag`'s mark to `newTag` (which must satisfy
-    * [[StoreFiles.requireStreamTag]]) in one atomic manifest write, so the
-    * stream restarts under the new tag with its exactly-once replay
-    * horizon intact. Refuses loudly when `oldTag` has no mark or `newTag`
-    * already has one — never a silent merge. Run under the single-writer
-    * contract. */
+    * accepts at writer construction (the pre-r11 rule allowed tags
+    * starting with '_' or '.'): [[GenerationLog.renameMark]] — `newTag`
+    * inherits `oldTag`'s replay horizon, never a silent merge. Run under
+    * the single-writer contract. */
   def renameStreamMark(spark: SparkSession, path: String,
-      oldTag: String, newTag: String): Unit = {
-    StoreFiles.requireStreamTag(newTag)
-    val m = readManifest(spark, path)
-    require(m.marks.contains(oldTag),
-      s"no stream mark for '$oldTag' at $path (have: ${m.marks.keys.toSeq.sorted.mkString(", ")})")
-    require(!m.marks.contains(newTag),
-      s"stream mark for '$newTag' already exists at $path — refusing to overwrite")
-    writeManifest(spark, path,
-      m.copy(marks = m.marks - oldTag + (newTag -> m.marks(oldTag))))
-  }
+      oldTag: String, newTag: String): Unit =
+    genLog(path).renameMark(spark, oldTag, newTag)
 
   private def commitGen(batch: DataFrame, idCol: String, textCol: String,
       path: String, stream: Option[(String, Long)]): Boolean = {
     val spark = batch.sparkSession
-    val m0 = readManifest(spark, path)
-    val gen = stream match {
-      case Some((tag, id)) =>
-        // replayed batch: at/below the committed high-water mark → no-op
-        if (m0.marks.get(tag).exists(id <= _)) return false
-        s"$tag-b$id"
-      case None => nextGenName(spark, path, m0.gens)
-    }
+    val lg = genLog(path)
+    val m0 = lg.read(spark)
+    // replayed batch: at/below the committed high-water mark → no-op
+    if (m0.redelivered(stream)) return false
+    val gen = lg.nextGen(spark, m0, stream)
     val (n, nDl, sd, hasP) = writeGen(batch, idCol, textCol, path, gen,
-      m0.nBuckets)
-    // an EMPTY batch still advances the stream mark (else its re-delivery
-    // would try again forever) but commits no generation
-    val marks = stream.fold(m0.marks) { case (tag, id) =>
-      m0.marks + (tag -> id) }
-    if (n == 0L) {
-      if (marks ne m0.marks) writeManifest(spark, path, m0.copy(marks = marks))
-      return false
-    }
-    // m0.copy, NOT a positional BmManifest(...) (r18 review: the fresh
-    // constructor silently defaulted cooling/tombs/tombCooling to empty —
-    // an append between deleteDocs and the healing compaction RESURRECTED
-    // every masked document, lost the takedown ids forever at the next
-    // sweep, and erased the cooling ledger out from under in-flight
-    // serves; the sibling AnnStore append already used copy)
-    writeManifest(spark, path, m0.copy(nDocs = m0.nDocs + n,
-      nDl = m0.nDl + nDl, sumDl = m0.sumDl + sd, gens = m0.gens :+ gen,
-      pgens = if (hasP) m0.pgens :+ gen else m0.pgens, marks = marks))
-    true
+      m0.long("n_buckets").toInt)
+    // m0.copy, NOT a fresh manifest (r18 review: a fresh one silently
+    // defaulted cooling/tombs/tombCooling to empty — an append between
+    // deleteDocs and the healing compaction RESURRECTED every masked
+    // document and erased the cooling ledger under in-flight serves)
+    lg.publish(spark, m0, stream, if (n == 0L) None else Some(m0.copy(
+      gens = m0.gens :+ gen).set(
+      "n_docs" -> (m0.long("n_docs") + n), "n_dl" -> (m0.long("n_dl") + nDl),
+      "sum_dl" -> (m0.double("sum_dl") + sd),
+      "pgens" -> (if (hasP) m0.strs("pgens") :+ gen else m0.strs("pgens")))))
   }
 
   /** The live tombstone ids as a one-column `doc_id` frame, or None when
@@ -456,7 +387,7 @@ object Retrieval {
     * [[deleteDocs]]) so the serve-side anti-join stays a map-side hash
     * probe at any corpus size. */
   private def tombstoneFrame(spark: SparkSession, path: String,
-      m: BmManifest): Option[DataFrame] = {
+      m: GenerationLog.Manifest): Option[DataFrame] = {
     if (m.tombs.isEmpty) None
     else {
       val f = StoreFiles.fs(spark, path)
@@ -471,8 +402,7 @@ object Retrieval {
   /** Number of live tombstoned doc ids (0 after [[compactIndex]] retires
     * them) — the audit counter for takedown verification. */
   def tombstoneCount(spark: SparkSession, path: String): Long = {
-    val m = readManifest(spark, path)
-    tombstoneFrame(spark, path, m).fold(0L)(_.count())
+    tombstoneFrame(spark, path, genLog(path).read(spark)).fold(0L)(_.count())
   }
 
   /** Tombstone-delete documents from the index — the takedown path
@@ -535,38 +465,15 @@ object Retrieval {
     }
   }
 
-  /** Thin adapter over [[StoreFiles.commitTombstones]] (r15, verdict #5:
-    * one implementation of the distinct → null-check → cap → flip shape
-    * across all four takedown stores): this store's half is redelivery
-    * detection and the manifest flip; the null check rides the parquet
-    * footers inside the shared write pass — no separate Spark action. */
+  /** Thin adapter over [[GenerationLog.commitTombstones]] (the
+    * distinct → null-check → cap → flip shape shared by all four
+    * takedown stores); the null check rides the parquet footers inside
+    * the shared write pass — no separate Spark action. */
   private def commitTombGen(ids: DataFrame, idCol: String, path: String,
-      stream: Option[(String, Long)]): Long = {
-    val spark = ids.sparkSession
-    val m0 = readManifest(spark, path)
-    val redelivered = stream.exists { case (tag, id) =>
-      m0.marks.get(tag).exists(id <= _) }
-    if (redelivered) 0L
-    else {
-      val marks = stream.fold(m0.marks) { case (tag, id) =>
-        m0.marks + (tag -> id) }
-      StoreFiles.commitTombstones(
-        ids.select(q(idCol).as("doc_id")), "doc_id",
-        s"$path/tombs", m0.tombs,
-        stream.map { case (tag, id) => s"$tag-b$id" },
-        "graft.bm25.maxTombstones", "Retrieval.deleteDocs",
-        "compactIndex()") {
-        case Some(gen) =>
-          writeManifest(spark, path,
-            m0.copy(tombs = m0.tombs :+ gen, marks = marks))
-        case None =>
-          // an EMPTY streamed batch still advances its mark (else
-          // redelivery would retry forever) but commits no generation
-          if (marks ne m0.marks)
-            writeManifest(spark, path, m0.copy(marks = marks))
-      }
-    }
-  }
+      stream: Option[(String, Long)]): Long =
+    genLog(path).commitTombstones(ids.select(q(idCol).as("doc_id")), "doc_id",
+      stream, "graft.bm25.maxTombstones", "Retrieval.deleteDocs",
+      "compactIndex()")
 
   /** Compact after N appends: df deltas collapse to one summed snapshot,
     * postings/dlen rewrite into size-targeted files at FULL repartition
@@ -585,29 +492,26 @@ object Retrieval {
     * is rewritten. */
   def compactIndex(spark: SparkSession, path: String,
       targetFiles: Int = 0): Unit = {
-    val m = readManifest(spark, path)
+    val lg = genLog(path)
+    val m = lg.read(spark)
+    val pgens = m.strs("pgens")
+    val nDocs = m.long("n_docs")
     val f = StoreFiles.fs(spark, path)
     // staged OUTSIDE the side dirs (GC never walks here) and non-hidden
     // (dot/underscore prefixes trip Spark's hidden-path filtering)
     val snap = s"$path/compact-snap.tmp"
     f.delete(new Path(snap), true) // orphan from a crashed prior compact
     if (m.gens.isEmpty) {
-      // EMPTIED index (a prior full-tombstone compaction): the shared
-      // retire step drains live tombstones + cooling grace copies —
-      // see StoreFiles.retireEmptiedStore
-      StoreFiles.retireEmptiedStore(spark, "graft.bm25.gcGraceMs",
-        m.cooling, m.tombs, m.tombCooling,
-        sides.map(side => s"$path/$side"), s"$path/tombs") { (c, tc) =>
-        writeManifest(spark, path,
-          m.copy(cooling = c, tombs = Nil, tombCooling = tc))
-      }
+      // EMPTIED index (a prior full-tombstone compaction): drain live
+      // tombstones + cooling grace copies
+      lg.retireEmptied(spark, m)
       return
     }
     val counted = readSide(spark, path, "dlen", m.gens).count()
-    require(counted == m.nDocs,
+    require(counted == nDocs,
       s"BM25 index inconsistent at $path: dlen rows $counted != " +
-        s"manifest n_docs ${m.nDocs} — refusing to compact")
-    val gen = nextGenName(spark, path, m.gens)
+        s"manifest n_docs $nDocs — refusing to compact")
+    val gen = lg.nextGen(spark, m, None)
     def target(side: String, gens: Seq[String]): Int =
       if (targetFiles > 0) targetFiles
       else StoreFiles.targetFileCount(gens
@@ -624,10 +528,10 @@ object Retrieval {
     val tomb = tombstoneFrame(spark, path, m)
     def scrub(df: DataFrame): DataFrame =
       tomb.fold(df)(t => df.join(broadcast(t), Seq("doc_id"), "left_anti"))
-    var hasP = m.pgens.nonEmpty
+    var hasP = pgens.nonEmpty
     if (hasP) {
-      scrub(readSide(spark, path, "postings", m.pgens))
-        .repartitionByRange(target("postings", m.pgens),
+      scrub(readSide(spark, path, "postings", pgens))
+        .repartitionByRange(target("postings", pgens),
           col("tbucket"), col("token"))
         .write.mode("overwrite")
           .option("partitionOverwriteMode", "static")
@@ -662,7 +566,7 @@ object Retrieval {
           f.delete(new Path(snap), true): Unit
         }
         if (tomb.isEmpty)
-          publishDfd(readSide(spark, path, "dfd", m.pgens)
+          publishDfd(readSide(spark, path, "dfd", pgens)
             .groupBy("tbucket", "token").agg(sum("df").as("df")))
         else
           // healing path: df from the scrubbed postings, exactly as
@@ -679,7 +583,7 @@ object Retrieval {
       .write.mode("overwrite").parquet(s"$path/dlen/$gen")
     // counters heal with the same flip (unchanged when no tombstones)
     val (nDocs2, nDl2, sumDl2) =
-      if (tomb.isEmpty) (m.nDocs, m.nDl, m.sumDl)
+      if (tomb.isEmpty) (nDocs, m.long("n_dl"), m.double("sum_dl"))
       else if (StoreFiles.parquetRowsWritten(spark, s"$path/dlen/$gen") == 0L)
         (0L, 0L, 0.0)
       else {
@@ -691,30 +595,14 @@ object Retrieval {
     val emptied = nDocs2 == 0L && tomb.nonEmpty
     if (emptied) f.delete(new Path(s"$path/dlen/$gen"), true)
     // cooling ledger (r11, closes the back-to-back-compaction race): the
-    // generations THIS compaction supersedes start cooling at `now` and
-    // survive every later compaction until they are at least
-    // `graft.bm25.gcGraceMs` old — so an in-flight serve planned against
-    // a recent manifest keeps its files for the full grace age no matter
-    // how many compactions run in between (compactIndexIfNeeded can
-    // legally fire twice in quick succession). Grace 0 restores the
-    // plain one-compaction deferral. Crash orphans (never in any
-    // manifest) still delete immediately.
-    val graceMs = spark.conf.getOption("graft.bm25.gcGraceMs")
-      .map(_.toLong).getOrElse(15L * 60 * 1000)
-    val now = System.currentTimeMillis()
-    val (cooling, keep) = StoreFiles.coolingStep(m.cooling,
-      (m.gens ++ m.pgens).toSet, gen, graceMs, now)
-    // retired tombstone generations cool under the same grace window
-    // (`gen` never exists under tombs/ — harmless in the keep-set)
-    val (tombCooling, keepT) = StoreFiles.coolingStep(m.tombCooling,
-      m.tombs.toSet, gen, graceMs, now)
-    writeManifest(spark, path, m.copy(
-      nDocs = nDocs2, nDl = nDl2, sumDl = sumDl2,
-      gens = if (emptied) Nil else Seq(gen),
-      pgens = if (hasP) Seq(gen) else Nil, cooling = cooling,
-      tombs = Nil, tombCooling = tombCooling))
-    sides.foreach(side => StoreFiles.sweepGenerations(spark, s"$path/$side", keep))
-    StoreFiles.sweepGenerations(spark, s"$path/tombs", keepT)
+    // generations THIS compaction supersedes — and the retired tombstone
+    // generations — cool for `graft.bm25.gcGraceMs` whatever the number
+    // of compactions in between (compactIndexIfNeeded can legally fire
+    // twice in quick succession). Grace 0 restores the plain
+    // one-compaction deferral.
+    lg.compact(spark, m, if (emptied) None else Some(gen))(_.set(
+      "n_docs" -> nDocs2, "n_dl" -> nDl2, "sum_dl" -> sumDl2,
+      "pgens" -> (if (hasP) Seq(gen) else Nil)))
   }
 
   /** Operational snapshot of the store: committed generations, live data
@@ -723,15 +611,15 @@ object Retrieval {
     * and what [[compactIndexIfNeeded]] decides on. */
   def indexStats(spark: SparkSession, path: String):
       Map[String, Long] = {
-    val m = readManifest(spark, path)
+    val m = genLog(path).read(spark)
     val files = liveFileCount(spark, path)
     val bytes =
       (m.gens.map(g => StoreFiles.dataBytesRecursive(spark, s"$path/dlen/$g")) ++
-        m.pgens.flatMap(g => Seq(
+        m.strs("pgens").flatMap(g => Seq(
           StoreFiles.dataBytesRecursive(spark, s"$path/postings/$g"),
           StoreFiles.dataBytesRecursive(spark, s"$path/dfd/$g")))).sum
     Map("gens" -> m.gens.size.toLong, "live_files" -> files,
-      "live_bytes" -> bytes, "n_docs" -> m.nDocs,
+      "live_bytes" -> bytes, "n_docs" -> m.long("n_docs"),
       "streams" -> m.marks.size.toLong,
       // tombstone ROWS from parquet footers (dup ids across takedown
       // batches count twice — stats-grade; tombstoneCount() distincts).
@@ -785,25 +673,27 @@ object Retrieval {
       path: String, queries: DataFrame, queryId: String, queryText: String,
       k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
     require(k >= 1, "k >= 1")
-    val m = readManifest(spark, path)
-    require(m.nDocs > 0, s"empty BM25 index at $path")
-    require(m.pgens.nonEmpty,
+    val m = genLog(path).read(spark)
+    val pgens = m.strs("pgens")
+    val nBuckets = m.long("n_buckets").toInt
+    require(m.long("n_docs") > 0, s"empty BM25 index at $path")
+    require(pgens.nonEmpty,
       s"BM25 index at $path has no postings (every document was blank)")
     // loud, cheap serve-time audit: every committed generation must exist
     val f = StoreFiles.fs(spark, path)
-    for ((side, gens) <- Seq("dlen" -> m.gens, "postings" -> m.pgens,
-        "dfd" -> m.pgens); g <- gens)
+    for ((side, gens) <- Seq("dlen" -> m.gens, "postings" -> pgens,
+        "dfd" -> pgens); g <- gens)
       require(f.exists(new Path(s"$path/$side/$g")),
         s"BM25 index at $path lost committed generation $side/$g")
-    val nDocs = m.nDocs.toDouble
-    val avgdl = math.rint(m.sumDl / m.nDl * 1e6) / 1e6
+    val nDocs = m.long("n_docs").toDouble
+    val avgdl = math.rint(m.double("sum_dl") / m.long("n_dl") * 1e6) / 1e6
     val qTokens = queries
       .select(q(queryId).as("query_id"),
         explode(TextAnalysis.tokens(q(queryText))).as("token"))
       .distinct()
     val (qPairs, tokDf) = collectQueryTokens(spark, qTokens)
     val buckets = tokDf
-      .select(bucketOf(col("token"), m.nBuckets).as("tbucket")).distinct()
+      .select(bucketOf(col("token"), nBuckets).as("tbucket")).distinct()
       .collect().map(r => Int.box(r.getInt(0))).toSeq
     // takedown masking (r14): tombstoned documents drop out of the
     // postings BEFORE scoring, so they cannot be returned; corpus stats
@@ -811,11 +701,11 @@ object Retrieval {
     // every other document's score is unchanged in the masked phase.
     // The anti-join sits above the bucket filter, so partition pruning
     // at the file listing is undisturbed.
-    val posts0 = readSide(spark, path, "postings", m.pgens)
+    val posts0 = readSide(spark, path, "postings", pgens)
       .filter(col("tbucket").isin(buckets: _*))
     val posts = tombstoneFrame(spark, path, m).fold(posts0) { t =>
       posts0.join(broadcast(t), Seq("doc_id"), "left_anti") }
-    val df = readSide(spark, path, "dfd", m.pgens)
+    val df = readSide(spark, path, "dfd", pgens)
       .filter(col("tbucket").isin(buckets: _*))
       .join(broadcast(tokDf), Seq("token"), "left_semi")
       .groupBy("token").agg(sum("df").as("df"))

@@ -20,8 +20,7 @@ import org.apache.spark.sql.functions._
   * both properties asserted in SketchStoreSpec, the sparse-phase equality
   * additionally in-gate.
   *
-  * Layout (r12: unified on the BM25/ANN manifest mechanics, replacing the
-  * v1 bare-parquet-dir + swap-compact layout): `manifest.json` (committed
+  * Layout (the shared [[GenerationLog]] protocol): `manifest.json` (committed
   * generation list + per-stream high-water marks + cooling ledger,
   * replaced atomically) and `rows/<gen>/` parquet. An append writes its
   * generation dir (invisible), then ONE manifest flip publishes it —
@@ -41,40 +40,12 @@ object SketchStore {
   private def q(n: String): org.apache.spark.sql.Column =
     col("`" + n.replace("`", "``") + "`")
 
-  private def manifestPath(path: String) = s"$path/manifest.json"
   private def rowsRoot(path: String) = s"$path/rows"
   private def genPath(path: String, gen: String) = s"$path/rows/$gen"
 
-  private case class SkManifest(gens: Seq[String], marks: Map[String, Long],
-      cooling: Map[String, Long])
-
-  private def readManifest(spark: SparkSession, path: String): SkManifest = {
-    val f = StoreFiles.fs(spark, path)
-    if (!f.exists(new org.apache.hadoop.fs.Path(manifestPath(path))) &&
-        StoreFiles.dataFileCount(spark, path) > 0)
-      throw new IllegalArgumentException(
-        s"sketch store at $path predates the manifest layout — run " +
-          "SketchStore.adoptLegacy to upgrade in place")
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readValue(StoreFiles.readUtf8(spark, manifestPath(path)),
-        classOf[java.util.Map[String, Any]])
-    require(String.valueOf(root.get("format")) == "graft-sketch-store",
-      s"not a sketch store at $path")
-    import scala.jdk.CollectionConverters._
-    SkManifest(
-      root.get("gens").asInstanceOf[java.util.List[Any]].asScala.toSeq
-        .map(String.valueOf),
-      StoreFiles.jsonLongMap(root.get("marks")),
-      StoreFiles.jsonLongMap(root.get("cooling")))
-  }
-
-  private def writeManifest(spark: SparkSession, path: String,
-      m: SkManifest): Unit =
-    StoreFiles.writeUtf8Atomic(spark, manifestPath(path),
-      s"""{"format":"graft-sketch-store","version":2,""" +
-        s""""gens":[${StoreFiles.jsonStrArr(m.gens)}],""" +
-        s""""marks":{${StoreFiles.jsonLongObj(m.marks)}},""" +
-        s""""cooling":{${StoreFiles.jsonLongObj(m.cooling)}}}""")
+  private def genLog(path: String) = GenerationLog(s"$path/manifest.json",
+    "graft-sketch-store", 2, s"sketch store at $path", Seq(rowsRoot(path)),
+    None, "graft.sketchstore.gcGraceMs")
 
   /** Per-key distinct sketches over `valueCol`: one row per key group —
     * (keys…, n_rows, sketch). `lgK` trades size (2^lgK bytes-ish) for
@@ -93,7 +64,7 @@ object SketchStore {
 
   /** The committed sketch rows: the union of the manifest's generations. */
   def rows(spark: SparkSession, path: String): DataFrame = {
-    val m = readManifest(spark, path)
+    val m = genLog(path).read(spark)
     require(m.gens.nonEmpty, s"sketch store at $path has no rows")
     m.gens.map(g => spark.read.parquet(genPath(path, g)))
       .reduce(_.unionByName(_))
@@ -123,41 +94,33 @@ object SketchStore {
       sketches.columns.contains("n_rows"),
       "append expects distinctSketch output (needs n_rows + sketch columns)")
     val spark = sketches.sparkSession
-    val f = StoreFiles.fs(spark, path)
-    val exists = f.exists(new org.apache.hadoop.fs.Path(manifestPath(path)))
-    val m0 = if (exists) readManifest(spark, path)
+    val lg = genLog(path)
+    val exists = lg.exists(spark)
+    val m0 = if (exists) lg.read(spark)
       else {
-        // a first append must not silently adopt a legacy bare-parquet
-        // store — surface the upgrade path instead
+        // a first append must not silently build on top of data files
+        // with no manifest (a pre-manifest store, or a lost manifest)
         if (StoreFiles.dataFileCount(spark, path) > 0)
           throw new IllegalArgumentException(
-            s"sketch store at $path predates the manifest layout — run " +
-              "SketchStore.adoptLegacy to upgrade in place")
-        SkManifest(Nil, Map.empty, Map.empty)
+            s"sketch store at $path holds data files but no manifest — " +
+              "pre-manifest store layouts are not supported; refusing to " +
+              "append over them")
+        GenerationLog.Manifest()
       }
-    val gen = stream match {
-      case Some((tag, id)) =>
-        if (m0.marks.get(tag).exists(id <= _)) return false
-        s"$tag-b$id"
-      case None => StoreFiles.nextGenName(spark, Seq(rowsRoot(path)), m0.gens)
-    }
+    if (m0.redelivered(stream)) return false
+    val gen = lg.nextGen(spark, m0, stream)
     sketches.withColumn("batch", lit(batchLabel))
       .write.mode("overwrite").parquet(genPath(path, gen))
     // row-presence from the parquet FOOTERS, not file-presence (an empty
     // batch writes a schema-only part file that must not commit as a
-    // generation) and not a read-back Spark job (that re-read was the
-    // bulk of the r12 manifest-adoption tax — StoreFiles.parquetRowsWritten)
-    val wrote = StoreFiles.parquetRowsWritten(spark, genPath(path, gen)) > 0L
-    val marks = stream.fold(m0.marks) { case (tag, id) =>
-      m0.marks + (tag -> id) }
-    if (!wrote) {
-      f.delete(new org.apache.hadoop.fs.Path(genPath(path, gen)), true)
-      if (exists && (marks ne m0.marks))
-        writeManifest(spark, path, m0.copy(marks = marks))
-      return false
-    }
-    writeManifest(spark, path, m0.copy(gens = m0.gens :+ gen, marks = marks))
-    true
+    // generation) and not a read-back Spark job (see
+    // StoreFiles.parquetRowsWritten)
+    if (StoreFiles.parquetRowsWritten(spark, genPath(path, gen)) <= 0L) {
+      StoreFiles.fs(spark, path)
+        .delete(new org.apache.hadoop.fs.Path(genPath(path, gen)), true)
+      // no manifest yet: an empty first batch creates no store
+      lg.publish(spark, m0, stream.filter(_ => exists), None)
+    } else lg.publish(spark, m0, stream, Some(m0.copy(gens = m0.gens :+ gen)))
   }
 
   /** Retract one ingest BATCH's contribution from the store — the
@@ -192,7 +155,7 @@ object SketchStore {
     require(batchLabel != null && batchLabel.nonEmpty &&
       batchLabel != "__compacted",
       "retractBatch: name a real ingest batch label")
-    val m0 = readManifest(spark, path)
+    val m0 = genLog(path).read(spark)
     if (m0.gens.isEmpty) 0L
     else {
       val all = rows(spark, path)
@@ -238,7 +201,7 @@ object SketchStore {
     require(fresh.columns.contains("sketch") && fresh.columns.contains("n_rows"),
       "rebuildKeys expects distinctSketch output (n_rows + sketch columns)")
     val spark = fresh.sparkSession
-    val m0 = readManifest(spark, path)
+    val m0 = genLog(path).read(spark)
     val store = rows(spark, path)
     val keyCols = store.columns
       .filterNot(Set("n_rows", "sketch", "batch").contains).toSeq
@@ -309,28 +272,21 @@ object SketchStore {
     * publishes an EMPTY store (gens = Nil — reads refuse loudly) instead
     * of a schema-less dir. */
   private def publishRewrite(spark: SparkSession, path: String,
-      m0: SkManifest, surviving: DataFrame): Unit = {
-    val gen = StoreFiles.nextGenName(spark, Seq(rowsRoot(path)), m0.gens)
+      m0: GenerationLog.Manifest, surviving: DataFrame): Unit = {
+    val lg = genLog(path)
+    val gen = lg.nextGen(spark, m0, None)
     surviving.coalesce(1).write.mode("overwrite").parquet(genPath(path, gen))
     val emptied =
       StoreFiles.parquetRowsWritten(spark, genPath(path, gen)) <= 0L
     if (emptied) StoreFiles.fs(spark, path)
       .delete(new org.apache.hadoop.fs.Path(genPath(path, gen)), true)
-    val graceMs = spark.conf.getOption("graft.sketchstore.gcGraceMs")
-      .map(_.toLong).getOrElse(15L * 60 * 1000)
-    val (cooling, keep) = StoreFiles.coolingStep(m0.cooling, m0.gens.toSet,
-      gen, graceMs, System.currentTimeMillis())
-    writeManifest(spark, path, m0.copy(
-      gens = if (emptied) Nil else Seq(gen), cooling = cooling))
-    StoreFiles.sweepGenerations(spark, rowsRoot(path), keep)
+    lg.compact(spark, m0, if (emptied) None else Some(gen))(identity)
   }
 
   /** Data files the CURRENT manifest lists — the store's live footprint. */
-  def liveFileCount(spark: SparkSession, path: String): Long = {
-    val m = readManifest(spark, path)
-    m.gens.map(g =>
+  def liveFileCount(spark: SparkSession, path: String): Long =
+    genLog(path).read(spark).gens.map(g =>
       StoreFiles.dataFileCountRecursive(spark, genPath(path, g)).toLong).sum
-  }
 
   /** Compact the store: the per-batch (keys…, n_rows, sketch) rows merge
     * into ONE row per key group — n_rows summed, sketches unioned
@@ -346,7 +302,8 @@ object SketchStore {
     * `graft.sketchstore.gcGraceMs` before the sweep; crash orphans
     * delete immediately. Stream marks survive. */
   def compact(spark: SparkSession, path: String): Unit = {
-    val m0 = readManifest(spark, path)
+    val lg = genLog(path)
+    val m0 = lg.read(spark)
     val store = rows(spark, path)
     val special = Set("n_rows", "sketch", "batch")
     val keyCols = store.columns.filterNot(special.contains).toSeq
@@ -362,14 +319,9 @@ object SketchStore {
       // original column order, so compacted and appended files stay
       // schema-aligned
       .select(store.columns.map(c => col("`" + c.replace("`", "``") + "`")): _*)
-    val gen = StoreFiles.nextGenName(spark, Seq(rowsRoot(path)), m0.gens)
+    val gen = lg.nextGen(spark, m0, None)
     merged.coalesce(1).write.mode("overwrite").parquet(genPath(path, gen))
-    val graceMs = spark.conf.getOption("graft.sketchstore.gcGraceMs")
-      .map(_.toLong).getOrElse(15L * 60 * 1000)
-    val (cooling, keep) = StoreFiles.coolingStep(m0.cooling, m0.gens.toSet,
-      gen, graceMs, System.currentTimeMillis())
-    writeManifest(spark, path, m0.copy(gens = Seq(gen), cooling = cooling))
-    StoreFiles.sweepGenerations(spark, rowsRoot(path), keep)
+    lg.compact(spark, m0, Some(gen))(identity)
   }
 
   /** Merged per-key estimates from everything in the store: (keys…,
@@ -389,45 +341,5 @@ object SketchStore {
       sum("n_rows").as("n_rows"),
       hll_sketch_estimate(hll_union_agg(col("sketch"), lit(true)))
         .as("n_distinct"))
-  }
-
-  /** One-time upgrade of a v1 (bare parquet dir) store to the manifest
-    * layout: the flat data files move under `rows/g0/` (pure renames; a
-    * same-named destination at the same length is a completed copy whose
-    * source remnant is dropped) and one manifest write publishes them.
-    * Returns false when the store already has a manifest. Idempotent;
-    * run under the single-writer contract. */
-  def adoptLegacy(spark: SparkSession, path: String): Boolean = {
-    import org.apache.hadoop.fs.Path
-    val f = StoreFiles.fs(spark, path)
-    if (f.exists(new Path(manifestPath(path)))) return false
-    // a v1 deployment that died inside compact's swapDir window left the
-    // store dir renamed aside as <path>.old — restore it first so the
-    // documented v1 "re-run compact to heal" contract survives the
-    // upgrade
-    StoreFiles.healDir(spark, path)
-    // the layout must actually BE legacy (flat files, plus at most a g0
-    // from a crashed prior adoption): other generation-shaped children
-    // under rows/ mean a MANIFEST-governed store whose manifest was
-    // lost — adopting that would publish only g0, silently dropping the
-    // rest and every stream mark; fail loud instead (the AnnStore
-    // adoption contract)
-    val rowsP = new Path(rowsRoot(path))
-    if (f.exists(rowsP)) f.listStatus(rowsP).foreach { st =>
-      val nm = st.getPath.getName
-      require(st.isFile || nm == "g0" || nm.startsWith(".") ||
-          nm.startsWith("_"),
-        s"sketch store at $path is not the legacy flat layout (found " +
-          s"directory '$nm' under rows/) — if the manifest was LOST from " +
-          "a manifest-governed store, restore it or re-create the store; " +
-          "adoptLegacy must not guess at generations")
-    }
-    require(StoreFiles.dataFileCount(spark, path) > 0 ||
-        f.exists(new Path(genPath(path, "g0"))),
-      s"no sketch store (v1 or v2) at $path")
-    StoreFiles.adoptFlatFilesInto(f, new Path(path),
-      new Path(genPath(path, "g0")), _ == "manifest.json")
-    writeManifest(spark, path, SkManifest(Seq("g0"), Map.empty, Map.empty))
-    true
   }
 }

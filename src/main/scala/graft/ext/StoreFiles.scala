@@ -3,9 +3,11 @@ package graft.ext
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Filesystem plumbing shared by the three persisted stores'
-  * `compact()` operations ([[FingerprintStore]], the MinHash store in
-  * [[Dedup]], [[SketchStore]]).
+/** Filesystem plumbing shared by the persisted stores: the MinHash store
+  * in [[Dedup]] and the five manifest stores that commit through
+  * [[GenerationLog]] ([[FingerprintStore]], [[SketchStore]],
+  * [[ValidationLedger]], the BM25 index in [[Retrieval]] and the
+  * [[AnnStore]] codes).
   *
   * Why compaction exists at all: every store is append-only by contract —
   * each crawl batch ADDS parquet files and never rewrites history. After
@@ -18,10 +20,9 @@ import org.apache.spark.sql.SparkSession
   * the uncompacted store.
   *
   * All paths go through the Hadoop FileSystem API, so the same code runs
-  * on local disk, HDFS, or s3a/gcs connectors. Directory swaps are
-  * rename-based: atomic on HDFS/local, copy-backed on object stores —
-  * each store's compact() orders its swaps so every crash window leaves a
-  * correct (at worst partially-compacted or superset-filter) store. */
+  * on local disk, HDFS, or s3a/gcs connectors. Visibility flips are a
+  * single atomic manifest replace for the manifest stores and
+  * rename-based for the MinHash store's generation directories. */
 object StoreFiles {
 
   def fs(spark: SparkSession, dir: String): FileSystem =
@@ -116,9 +117,7 @@ object StoreFiles {
     * an empty generation (an empty batch still writes a schema-only part
     * file), and the former `spark.read.parquet(gen).isEmpty` re-read cost
     * a whole extra Spark job per append — listing + schema inference +
-    * task launch, measured by tools/StoreProbe as the dominant piece of
-    * the r12 manifest-adoption tax on `stats_sketch_build` (~0.15 s per
-    * append). Each parquet footer already carries its exact row count;
+    * task launch. Each parquet footer already carries its exact row count;
     * summing them reads a few KB per file with zero jobs and zero
     * listener races. Returns -1 only if no visible parquet files exist.
     * One traversal implementation for both footer readers (r15):
@@ -288,27 +287,26 @@ object StoreFiles {
     }
   }
 
-  /** One codec for the pre-manifest stores' small marks files
-    * (`{"format":"…","marks":{tag:long}}`; r16 review — the MinHash
-    * store's and the pipeline staging dir's hand-rolled copies could
-    * drift). Absent file = no marks. The format tag is asserted so a
-    * foreign JSON file refuses loudly instead of parsing as empty. */
+  /** The small marks files of the stores without a manifest
+    * (`{"format":"…","marks":{tag:long}}` — the MinHash store and the
+    * pipeline staging dir), on the [[GenerationLog]] JSON codec. Absent
+    * file = no marks. The format tag is asserted so a foreign JSON file
+    * refuses loudly instead of parsing as empty. */
   def readLongMarks(spark: SparkSession, path: String,
       format: String): Map[String, Long] = {
     if (!fs(spark, path).exists(new Path(path))) Map.empty
     else {
-      val root = new com.fasterxml.jackson.databind.ObjectMapper().readValue(
-        readUtf8(spark, path), classOf[java.util.Map[String, Any]])
-      require(String.valueOf(root.get("format")) == format,
+      val root = GenerationLog.decode(readUtf8(spark, path))
+      require(root.get("format").contains(format),
         s"not a $format file: $path")
-      jsonLongMap(root.get("marks"))
+      GenerationLog.longMap(root.get("marks"))
     }
   }
 
   def writeLongMarks(spark: SparkSession, path: String, format: String,
       marks: Map[String, Long]): Unit =
     writeUtf8Atomic(spark, path,
-      s"""{"format":"$format","marks":{${jsonLongObj(marks)}}}""")
+      GenerationLog.encode(Seq("format" -> format, "marks" -> marks)))
 
   /** Publish a generation directory exactly once (r16 — the one
     * stage→rename implementation for the pre-manifest publish shape,
@@ -397,36 +395,11 @@ object StoreFiles {
       .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** Shared legacy-adoption move loop (fingerprint + sketch stores): move
-    * every visible flat FILE under `srcDir` into `dstDir`, resume-aware —
-    * a same-named destination at the same length is a completed copy from
-    * a crashed prior attempt (its source remnant is dropped); a differing
-    * length is a partial copy cleared before the rename retries. `skip`
-    * excludes names that must stay (e.g. a manifest). */
-  def adoptFlatFilesInto(f: FileSystem, srcDir: Path, dstDir: Path,
-      skip: String => Boolean): Unit = {
-    f.mkdirs(dstDir)
-    f.listStatus(srcDir).foreach { st =>
-      val nm = st.getPath.getName
-      if (st.isFile && !nm.startsWith(".") && !skip(nm)) {
-        val dst = new Path(dstDir, nm)
-        if (f.exists(dst)) {
-          if (f.getFileStatus(dst).getLen == st.getLen) {
-            f.delete(st.getPath, false): Unit
-          } else {
-            f.delete(dst, false)
-            require(f.rename(st.getPath, dst), s"adopt: rename $nm failed")
-          }
-        } else require(f.rename(st.getPath, dst), s"adopt: rename $nm failed")
-      }
-    }
-  }
-
   /** Heal a directory left mid-swap by a crashed [[swapDir]]: if `live`
     * is missing but `live.old` exists, the crash hit the window between
     * the two renames — restore the old (pre-compaction, still correct)
-    * data. Every store's `compact()` calls this FIRST, so "re-run compact
-    * to heal" genuinely works; idempotent no-op otherwise. */
+    * data. The MinHash store's compaction calls this FIRST, so "re-run
+    * compact to heal" genuinely works; idempotent no-op otherwise. */
   def healDir(spark: SparkSession, liveDir: String): Unit = {
     val f = fs(spark, liveDir)
     val live = new Path(liveDir)
@@ -457,49 +430,6 @@ object StoreFiles {
       sys.error(s"compact: rename $tmp -> $live failed (rolled back)")
     }
     f.delete(old, true)
-  }
-
-  /** The generational stores' shared GC step (BM25 index, ANN codes):
-    * given the pre-compaction manifest's `cooling` ledger (gen →
-    * superseded-at epoch ms), the generations this compaction supersedes,
-    * and the new generation, returns the cooling map to publish and the
-    * keep-set for [[sweepGenerations]]. Entries younger than `graceMs`
-    * survive ANY number of back-to-back compactions — the age gate, not
-    * the compaction count, drives the sweep. */
-  def coolingStep(cooling: Map[String, Long], superseded: Set[String],
-      newGen: String, graceMs: Long, now: Long):
-      (Map[String, Long], Set[String]) = {
-    val stillCooling = cooling.filter { case (_, t) => now - t < graceMs }
-    val sup = (superseded - newGen).map(_ -> now).toMap
-    (stillCooling ++ sup, sup.keySet ++ stillCooling.keySet + newGen)
-  }
-
-  /** The generational stores' EMPTIED-state retire step, shared by the
-    * BM25 and ANN compactions (r15 review: it existed as two lockstep
-    * copies, and the leak it fixes — an emptied store's cooled data
-    * generations surviving forever — had to be patched twice). A store
-    * emptied by a full-tombstone compaction has no data to rewrite, but
-    * it can still hold live tombstones from later deletes (retiring them
-    * IS the physical step — else a tombstone-deadline policy reports it
-    * forever "due") and grace copies still cooling from the emptying
-    * compaction (both data and tombstone sides). Steps both cooling
-    * ledgers, hands the caller the maps to publish in ITS manifest
-    * format, then sweeps. No-op when there is nothing to retire. */
-  def retireEmptiedStore(spark: SparkSession, graceConfKey: String,
-      cooling: Map[String, Long], tombs: Seq[String],
-      tombCooling: Map[String, Long], dataRoots: Seq[String],
-      tombsRoot: String)(
-      publish: (Map[String, Long], Map[String, Long]) => Unit): Unit = {
-    if (tombs.isEmpty && tombCooling.isEmpty && cooling.isEmpty) return
-    val graceMs = spark.conf.getOption(graceConfKey).map(_.toLong)
-      .getOrElse(15L * 60 * 1000)
-    val now = System.currentTimeMillis()
-    val (cool2, keep) = coolingStep(cooling, Set.empty, "", graceMs, now)
-    val (tombCool2, keepT) = coolingStep(tombCooling, tombs.toSet, "",
-      graceMs, now)
-    publish(cool2, tombCool2)
-    dataRoots.foreach(r => sweepGenerations(spark, r, keep - ""))
-    sweepGenerations(spark, tombsRoot, keepT - "")
   }
 
   /** Delete every generation directory under `root` that is not in
@@ -534,24 +464,6 @@ object StoreFiles {
     "g" + (if (nums.isEmpty) 0L else nums.max + 1L)
   }
 
-  /** JSON fragments for the generational stores' hand-built manifests —
-    * one encoding for both the BM25 index and the ANN codes manifest, so
-    * ledger-format changes cannot drift between them. */
-  def jsonStrArr(xs: Seq[String]): String =
-    xs.map("\"" + _ + "\"").mkString(",")
-
-  def jsonLongObj(xs: Map[String, Long]): String =
-    xs.toSeq.sortBy(_._1).map { case (k, v) => s""""$k":$v""" }.mkString(",")
-
-  /** Parse a jackson-decoded JSON object of longs; null-tolerant (absent
-    * key in an older manifest = empty). */
-  def jsonLongMap(v: Any): Map[String, Long] = {
-    import scala.jdk.CollectionConverters._
-    if (v == null) Map.empty
-    else v.asInstanceOf[java.util.Map[String, Any]].asScala
-      .map { case (k, x) => k -> x.asInstanceOf[Number].longValue() }.toMap
-  }
-
   /** Stream-tag contract shared by the generational stores: tags name
     * `<tag>-b<id>` generation dirs, so they must not collide with the
     * `g<N>` auto-generation namespace and must not start with a dot or
@@ -581,5 +493,242 @@ object StoreFiles {
         s"(driver-collected); split the batch or raise spark.conf " +
         s"'$confKey' deliberately")
     rows
+  }
+}
+
+/** The one commit protocol of the five manifest stores — the
+  * [[FingerprintStore]], [[SketchStore]], [[ValidationLedger]], the BM25
+  * index in [[Retrieval]] and the [[AnnStore]] codes — in the shape of
+  * Delta Lake's single log of table metadata (Armbrust et al., VLDB 2020).
+  *
+  * A store's state is ONE small JSON manifest, `file`:
+  *
+  *   - keys: `format` (the store's tag, asserted on every read) and
+  *     `version`, then the store's own payload keys (filter geometry,
+  *     corpus counters, check contract — read by key), then `gens` (the
+  *     committed data generations under `roots`), `marks` (per-stream
+  *     high-water batch ids), `cooling` (superseded generation → epoch
+  *     ms), and, for stores with takedown, `tombs` / `tombcooling` (the
+  *     same two ledgers for tombstone generations under `tombsRoot`);
+  *   - commit: a writer stages its generation's data under a name no
+  *     manifest lists (invisible to every reader), then ONE atomic
+  *     manifest replace ([[StoreFiles.writeUtf8Atomic]]) publishes it. A
+  *     crash before the replace leaves an orphan the next compaction
+  *     sweeps; there is no window in which a reader sees part of a commit;
+  *   - marks: a streamed batch `(tag, id)` names its generation
+  *     `<tag>-b<id>` and folds its id into `marks` in the same replace; a
+  *     redelivery at or below the mark is a no-op, even after compaction
+  *     removed its generation, and an empty batch still advances its mark;
+  *   - GC: a compaction publishes its one new generation and moves every
+  *     generation it supersedes — data and tombstones — into the cooling
+  *     ledgers; the sweep deletes every directory that is neither live
+  *     nor younger than the store's `*.gcGraceMs` (default 15 min), so
+  *     lock-free serves planned against an older manifest keep their files
+  *     across any number of back-to-back compactions.
+  *
+  * A missing manifest refuses loudly: the pre-manifest layouts of earlier
+  * store versions are not supported. Single-writer contract per store. */
+private[ext] final case class GenerationLog(file: String, format: String,
+    version: Int, what: String, roots: Seq[String],
+    tombsRoot: Option[String], graceConfKey: String) {
+  import GenerationLog._
+
+  def exists(spark: SparkSession): Boolean =
+    StoreFiles.fs(spark, file).exists(new Path(file))
+
+  def read(spark: SparkSession): Manifest = {
+    val text =
+      try StoreFiles.readUtf8(spark, file)
+      catch {
+        case _: java.io.FileNotFoundException =>
+          throw new IllegalArgumentException(s"$what has no manifest " +
+            s"($file) — pre-manifest store layouts are not supported; " +
+            "re-create the store from its source (or restore the manifest " +
+            "if it was lost)")
+      }
+    val root = decode(text)
+    require(root.get("format").contains(format),
+      s"$what: $file is not a $format manifest")
+    Manifest(strList(root.get("gens")), longMap(root.get("marks")),
+      longMap(root.get("cooling")), strList(root.get("tombs")),
+      longMap(root.get("tombcooling")), root -- Reserved)
+  }
+
+  def write(spark: SparkSession, m: Manifest): Unit =
+    StoreFiles.writeUtf8Atomic(spark, file, encode(
+      Seq("format" -> format, "version" -> version) ++
+        m.payload.toSeq.sortBy(_._1) ++
+        Seq("gens" -> m.gens, "marks" -> m.marks, "cooling" -> m.cooling) ++
+        (if (tombsRoot.isEmpty) Nil
+         else Seq("tombs" -> m.tombs, "tombcooling" -> m.tombCooling))))
+
+  /** The generation a commit stages: `<tag>-b<id>` for a streamed batch,
+    * else the next `g<N>` above everything committed or on disk (a
+    * crashed writer's orphan is never adopted). */
+  def nextGen(spark: SparkSession, m: Manifest, stream: Stream): String =
+    streamGen(stream).getOrElse(StoreFiles.nextGenName(spark, roots, m.gens))
+
+  /** The one publish: `next` (holding the staged generation) with the
+    * stream's mark folded in, in ONE manifest replace. `None` is an empty
+    * batch: nothing commits, but a streamed batch still advances its mark
+    * (else its redelivery would retry forever). Returns whether a
+    * generation committed. */
+  def publish(spark: SparkSession, m0: Manifest, stream: Stream,
+      next: Option[Manifest]): Boolean = next match {
+    case Some(m1) => write(spark, m1.marked(stream)); true
+    case None =>
+      if (stream.isDefined) write(spark, m0.marked(stream))
+      false
+  }
+
+  /** Tombstone commit: redelivery no-op, then the shared
+    * stage/null-check/cap/flip of [[StoreFiles.commitTombstones]], then
+    * one [[publish]] appending the tombstone generation. Returns the
+    * tombstone rows written (0 = redelivered or empty). */
+  def commitTombstones(ids: org.apache.spark.sql.DataFrame, idName: String,
+      stream: Stream, capConfKey: String, caller: String,
+      compactHint: String): Long = {
+    val spark = ids.sparkSession
+    val m0 = read(spark)
+    if (m0.redelivered(stream)) 0L
+    else StoreFiles.commitTombstones(ids, idName, tombsRoot.get, m0.tombs,
+        streamGen(stream), capConfKey, caller, compactHint) { gen =>
+      publish(spark, m0, stream, gen.map(g => m0.copy(tombs = m0.tombs :+ g)))
+      ()
+    }
+  }
+
+  /** Migration path for stream tags the tag rule no longer accepts at
+    * writer construction (pre-r11 tags could start with '_' or '.'):
+    * moves `oldTag`'s mark to `newTag` in one manifest replace, so the
+    * stream restarts under the new tag with its replay horizon intact.
+    * Refuses when `oldTag` has no mark or `newTag` already has one. */
+  def renameMark(spark: SparkSession, oldTag: String, newTag: String): Unit = {
+    StoreFiles.requireStreamTag(newTag)
+    val m = read(spark)
+    require(m.marks.contains(oldTag), s"no stream mark for '$oldTag' in " +
+      s"$what (have: ${m.marks.keys.toSeq.sorted.mkString(", ")})")
+    require(!m.marks.contains(newTag), s"stream mark for '$newTag' already " +
+      s"exists in $what — refusing to overwrite")
+    write(spark, m.copy(marks = m.marks - oldTag + (newTag -> m.marks(oldTag))))
+  }
+
+  /** The one compaction/GC step: every generation `m0` lists — data and
+    * tombstones alike, compaction being each store's erasure point —
+    * starts cooling now, entries older than the grace drop out, and ONE
+    * manifest replace publishes `edit` of the result with `newGen` as the
+    * only live data generation (None: the store emptied). Then every
+    * directory under `roots` / `tombsRoot` that is neither live nor
+    * cooling is swept — cooled-out copies and crash orphans alike. Stream
+    * marks survive. */
+  def compact(spark: SparkSession, m0: Manifest, newGen: Option[String])(
+      edit: Manifest => Manifest): Unit = {
+    val graceMs = spark.conf.getOption(graceConfKey).map(_.toLong)
+      .getOrElse(15L * 60 * 1000)
+    val now = System.currentTimeMillis()
+    def cool(ledger: Map[String, Long], retired: Seq[String]) =
+      ledger.filter { case (_, t) => now - t < graceMs } ++
+        (retired.toSet -- newGen).map(_ -> now)
+    val m1 = edit(m0.copy(gens = newGen.toSeq,
+      cooling = cool(m0.cooling, m0.gens), tombs = Nil,
+      tombCooling = cool(m0.tombCooling, m0.tombs)))
+    write(spark, m1)
+    roots.foreach(StoreFiles.sweepGenerations(spark, _,
+      m1.gens.toSet ++ m1.cooling.keySet))
+    tombsRoot.foreach(StoreFiles.sweepGenerations(spark, _,
+      m1.tombCooling.keySet))
+  }
+
+  /** Compaction of an EMPTIED store (a full-tombstone compaction left no
+    * data): nothing to rewrite, but later tombstones still retire here
+    * (else a tombstone-deadline policy reports the store due forever) and
+    * the grace copies of the emptying compaction still cool out. No-op
+    * when there is nothing to retire. */
+  def retireEmptied(spark: SparkSession, m0: Manifest): Unit =
+    if (m0.tombs.nonEmpty || m0.tombCooling.nonEmpty || m0.cooling.nonEmpty)
+      compact(spark, m0, None)(identity)
+}
+
+private[ext] object GenerationLog {
+
+  /** A streamed batch's `(tag, batchId)`; None for a batch append. */
+  type Stream = Option[(String, Long)]
+
+  /** A store's manifest. `payload` holds the store's own keys — numbers
+    * and string lists — read by key. */
+  final case class Manifest(gens: Seq[String] = Nil,
+      marks: Map[String, Long] = Map.empty,
+      cooling: Map[String, Long] = Map.empty, tombs: Seq[String] = Nil,
+      tombCooling: Map[String, Long] = Map.empty,
+      payload: Map[String, Any] = Map.empty) {
+
+    /** A streamed batch at or below its tag's committed mark. */
+    def redelivered(stream: Stream): Boolean =
+      stream.exists { case (tag, id) => marks.get(tag).exists(id <= _) }
+
+    def marked(stream: Stream): Manifest =
+      stream.fold(this) { case (tag, id) => copy(marks = marks + (tag -> id)) }
+
+    def long(key: String): Long = number(key).longValue()
+    def double(key: String): Double = number(key).doubleValue()
+    def strs(key: String): Seq[String] = strList(payload.get(key))
+    def set(kvs: (String, Any)*): Manifest = copy(payload = payload ++ kvs)
+
+    private def number(key: String): Number = payload.get(key) match {
+      case Some(n: Number) => n
+      case other => throw new IllegalArgumentException(
+        s"manifest key '$key' is missing or not a number: $other")
+    }
+  }
+
+  def streamGen(stream: Stream): Option[String] =
+    stream.map { case (tag, id) => s"$tag-b$id" }
+
+  private val Reserved =
+    Set("format", "version", "gens", "marks", "cooling", "tombs", "tombcooling")
+
+  private val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
+
+  /** The JSON codec: an ordered object of strings, numbers, string
+    * sequences and string → long maps (maps written key-sorted). Jackson
+    * escapes every string, so any tag, label or check name round-trips. */
+  def encode(fields: Seq[(String, Any)]): String = {
+    import scala.jdk.CollectionConverters._
+    def toJava(v: Any): Any = v match {
+      case xs: Seq[_] => xs.asJava
+      case m: Map[_, _] =>
+        new java.util.TreeMap[String, Any](
+          m.map { case (k, x) => String.valueOf(k) -> x }.asJava)
+      case x => x
+    }
+    val obj = new java.util.LinkedHashMap[String, Any]()
+    fields.foreach { case (k, v) => obj.put(k, toJava(v)) }
+    mapper.writeValueAsString(obj)
+  }
+
+  /** Top-level object of a JSON document; arrays decode to Seq. */
+  def decode(text: String): Map[String, Any] = {
+    import scala.jdk.CollectionConverters._
+    mapper.readValue(text, classOf[java.util.Map[String, Any]]).asScala
+      .map {
+        case (k, xs: java.util.List[_]) => k -> xs.asScala.toSeq
+        case kv => kv
+      }.toMap
+  }
+
+  /** A decoded string list; absent = empty. */
+  def strList(v: Option[Any]): Seq[String] = v match {
+    case Some(xs: Seq[_]) => xs.map(String.valueOf)
+    case _ => Nil
+  }
+
+  /** A decoded string → long object; absent = empty. */
+  def longMap(v: Option[Any]): Map[String, Long] = {
+    import scala.jdk.CollectionConverters._
+    v match {
+      case Some(m: java.util.Map[_, _]) => m.asScala.map { case (k, x) =>
+        String.valueOf(k) -> x.asInstanceOf[Number].longValue() }.toMap
+      case _ => Map.empty
+    }
   }
 }

@@ -41,7 +41,7 @@ import graft.backend.Validator
   * Warning-only checks (`raiseWarning`) are counted in `failures` but do
   * not fail the partition — `passed` mirrors `ValidationResult.passed`.
   *
-  * Layout: the shared manifest-generation protocol (`manifest.json` +
+  * Layout: the shared [[GenerationLog]] protocol (`manifest.json` +
   * `rows/<gen>/` parquet; atomic visibility, cooling-ledger GC on compact)
   * — one crash-safety story with the BM25/ANN/fingerprint/sketch stores.
   * Single-writer per ledger, like every store in this family.
@@ -54,51 +54,24 @@ object ValidationLedger {
 
   private def q(n: String): Column = col("`" + n.replace("`", "``") + "`")
 
-  private def manifestPath(path: String) = s"$path/manifest.json"
   private def rowsRoot(path: String) = s"$path/rows"
   private def genPath(path: String, gen: String) = s"$path/rows/$gen"
 
-  /** `contract` (r14): the canonical names of the ledgered check surface,
-    * recorded at the first commit and required equal on every later
-    * increment — see the guard in doIncrementFresh. Absent in pre-r14
-    * manifests (reads as Nil; adopted at the next commit). */
-  private case class LgManifest(gens: Seq[String], marks: Map[String, Long],
-      cooling: Map[String, Long], contract: Seq[String] = Nil)
-
-  private def readManifest(spark: SparkSession, path: String): LgManifest = {
-    val root = new com.fasterxml.jackson.databind.ObjectMapper()
-      .readValue(StoreFiles.readUtf8(spark, manifestPath(path)),
-        classOf[java.util.Map[String, Any]])
-    require(String.valueOf(root.get("format")) == "graft-validation-ledger",
-      s"not a validation ledger at $path")
-    import scala.jdk.CollectionConverters._
-    LgManifest(
-      root.get("gens").asInstanceOf[java.util.List[Any]].asScala.toSeq
-        .map(String.valueOf),
-      StoreFiles.jsonLongMap(root.get("marks")),
-      StoreFiles.jsonLongMap(root.get("cooling")),
-      Option(root.get("contract"))
-        .map(_.asInstanceOf[java.util.List[Any]].asScala.toSeq
-          .map(String.valueOf)).getOrElse(Nil))
-  }
-
-  private def writeManifest(spark: SparkSession, path: String,
-      m: LgManifest): Unit =
-    StoreFiles.writeUtf8Atomic(spark, manifestPath(path),
-      s"""{"format":"graft-validation-ledger","version":1,""" +
-        s""""gens":[${StoreFiles.jsonStrArr(m.gens)}],""" +
-        s""""marks":{${StoreFiles.jsonLongObj(m.marks)}},""" +
-        s""""cooling":{${StoreFiles.jsonLongObj(m.cooling)}},""" +
-        s""""contract":[${StoreFiles.jsonStrArr(m.contract)}]}""")
+  /** Payload key `contract` (r14): the canonical names of the ledgered
+    * check surface, recorded at the first commit and required equal on
+    * every later increment — see [[incrementPreflight]]. Absent in
+    * pre-r14 manifests (reads as Nil; adopted at the next commit). */
+  private def genLog(path: String) = GenerationLog(s"$path/manifest.json",
+    "graft-validation-ledger", 1, s"validation ledger at $path",
+    Seq(rowsRoot(path)), None, "graft.ledger.gcGraceMs")
 
   private def exists(spark: SparkSession, path: String): Boolean =
-    StoreFiles.fs(spark, path)
-      .exists(new org.apache.hadoop.fs.Path(manifestPath(path)))
+    genLog(path).exists(spark)
 
   /** The committed ledger rows: (partition, batch, n_rows, failures
     * map<check,count>, n_failed, passed), one row per validated partition. */
   def rows(spark: SparkSession, path: String): DataFrame = {
-    val m = readManifest(spark, path)
+    val m = genLog(path).read(spark)
     require(m.gens.nonEmpty, s"validation ledger at $path has no rows")
     m.gens.map(g => spark.read.parquet(genPath(path, g)))
       .reduce(_.unionByName(_))
@@ -110,7 +83,7 @@ object ValidationLedger {
   def validatedPartitions(spark: SparkSession, path: String): Set[String] =
     if (!exists(spark, path)) Set.empty
     else {
-      val m = readManifest(spark, path)
+      val m = genLog(path).read(spark)
       if (m.gens.isEmpty) Set.empty
       else StoreFiles.collectBounded(
         rows(spark, path).select("partition").distinct(),
@@ -205,9 +178,8 @@ object ValidationLedger {
     // method — a non-local return inside a closure rides
     // NonLocalReturnControl, which any future catch-all wrapper would
     // swallow silently; everything below is expression-structured.)
-    val redelivered = stream.exists { case (tag, id) =>
-      exists(spark, path) &&
-        readManifest(spark, path).marks.get(tag).exists(id <= _) }
+    val redelivered = stream.isDefined && exists(spark, path) &&
+      genLog(path).read(spark).redelivered(stream)
     if (redelivered) emptyResult(spark)
     else doIncrementFresh(schema, data, partitionCol, path, batchLabel,
       stream, candidates, pre)
@@ -261,8 +233,8 @@ object ValidationLedger {
         "revalidate; run validateIncrement to establish one")
     require(data.columns.contains(partitionCol),
       s"partition column '$partitionCol' not in data")
-    if (readManifest(spark, path).marks.get(streamTag)
-        .exists(batchId <= _)) emptyResult(spark)
+    if (genLog(path).read(spark).redelivered(Some((streamTag, batchId))))
+      emptyResult(spark)
     else {
       val pre = incrementPreflight(schema, data, partitionCol, path)
       invalidate(spark, path, partitions): Unit
@@ -313,11 +285,11 @@ object ValidationLedger {
         .distinct ++
       Seq(s"__partition__:$partitionCol")).sorted
     if (exists(spark, path)) {
-      val mc = readManifest(spark, path)
-      if (mc.gens.nonEmpty && mc.contract.nonEmpty &&
-          mc.contract != contract) {
-        val added = contract.diff(mc.contract)
-        val removed = mc.contract.diff(contract)
+      val mc = genLog(path).read(spark)
+      val recorded = mc.strs("contract")
+      if (mc.gens.nonEmpty && recorded.nonEmpty && recorded != contract) {
+        val added = contract.diff(recorded)
+        val removed = recorded.diff(contract)
         sys.error(s"validateIncrement: the ledger at $path was built " +
           "under a DIFFERENT check contract — its per-partition verdicts " +
           "would not be comparable with this increment's (" +
@@ -385,28 +357,22 @@ object ValidationLedger {
 
     // commit as one generation: write (invisible), then one manifest flip
     def commit(verdicts: DataFrame): DataFrame = {
-      val m0 = if (exists(spark, path)) readManifest(spark, path)
-        else LgManifest(Nil, Map.empty, Map.empty)
-      val gen = stream match {
-        case Some((tag, id)) => s"$tag-b$id"
-        case None => StoreFiles.nextGenName(spark, Seq(rowsRoot(path)), m0.gens)
-      }
+      val lg = genLog(path)
+      val existed = lg.exists(spark)
+      val m0 = if (existed) lg.read(spark) else GenerationLog.Manifest()
+      val gen = lg.nextGen(spark, m0, stream)
       verdicts.write.mode("overwrite").parquet(genPath(path, gen))
       // row-presence from the parquet footers — zero read-back Spark jobs
       // (see StoreFiles.parquetRowsWritten)
       val wrote = StoreFiles.parquetRowsWritten(spark, genPath(path, gen)) > 0L
-      val marks = stream.fold(m0.marks) { case (tag, id) =>
-        m0.marks + (tag -> id) }
       if (!wrote) { // an all-filtered increment: nothing to record
         StoreFiles.fs(spark, path)
           .delete(new org.apache.hadoop.fs.Path(genPath(path, gen)), true)
-        if (exists(spark, path) && (marks ne m0.marks))
-          writeManifest(spark, path, m0.copy(marks = marks))
+        lg.publish(spark, m0, stream.filter(_ => existed), None): Unit
         emptyResult(spark)
       } else {
-        writeManifest(spark, path,
-          m0.copy(gens = m0.gens :+ gen, marks = marks,
-            contract = contract))
+        lg.publish(spark, m0, stream, Some(m0.copy(gens = m0.gens :+ gen)
+          .set("contract" -> contract))): Unit
         spark.read.parquet(genPath(path, gen))
       }
     }
@@ -556,12 +522,9 @@ object ValidationLedger {
     * the store exists) so the NEXT redelivery returns before any scan. */
   private def advanceMarkOnly(spark: SparkSession, path: String,
       stream: Option[(String, Long)]): Unit =
-    stream.foreach { case (tag, id) =>
-      if (exists(spark, path)) {
-        val m = readManifest(spark, path)
-        if (!m.marks.get(tag).exists(id <= _))
-          writeManifest(spark, path, m.copy(marks = m.marks + (tag -> id)))
-      }
+    if (stream.isDefined && exists(spark, path)) {
+      val m = genLog(path).read(spark)
+      if (!m.redelivered(stream)) genLog(path).publish(spark, m, stream, None): Unit
     }
 
   /** Whole-corpus validation posture from the ledger alone — reads KBs,
@@ -662,10 +625,6 @@ object ValidationLedger {
       .orderBy("partition")
   }
 
-  /** Rewrite the committed generations as one (rows are already one per
-    * partition — this coalesces FILES, not semantics). Atomic flip;
-    * superseded generations cool for `graft.ledger.gcGraceMs` (default
-    * 15 min) before the sweep, so lock-free readers survive. */
   /** Forget the verdicts for the given partitions — the REVALIDATION
     * path (r14). Under the validate-once contract a partition whose
     * underlying data is REWRITTEN in place (a backfill correction, a
@@ -691,7 +650,8 @@ object ValidationLedger {
       "invalidate: empty partition list — name the partitions whose " +
         "data was rewritten")
     require(!partitions.contains(null), "invalidate: null partition key")
-    val m0 = readManifest(spark, path)
+    val lg = genLog(path)
+    val m0 = lg.read(spark)
     if (m0.gens.isEmpty) 0L
     else {
       val pset = partitions.distinct
@@ -700,7 +660,7 @@ object ValidationLedger {
         .filter(col("partition").isin(pset: _*)).count()
       if (removed == 0L) 0L
       else {
-        val gen = StoreFiles.nextGenName(spark, Seq(rowsRoot(path)), m0.gens)
+        val gen = lg.nextGen(spark, m0, None)
         all.filter(!col("partition").isin(pset: _*))
           .coalesce(1).write.mode("overwrite").parquet(genPath(path, gen))
         // everything invalidated: publish an empty ledger (gens = Nil),
@@ -709,28 +669,22 @@ object ValidationLedger {
           StoreFiles.parquetRowsWritten(spark, genPath(path, gen)) == 0L
         if (emptied) StoreFiles.fs(spark, path)
           .delete(new org.apache.hadoop.fs.Path(genPath(path, gen)), true)
-        val graceMs = spark.conf.getOption("graft.ledger.gcGraceMs")
-          .map(_.toLong).getOrElse(15L * 60 * 1000)
-        val (cooling, keep) = StoreFiles.coolingStep(m0.cooling,
-          m0.gens.toSet, gen, graceMs, System.currentTimeMillis())
-        writeManifest(spark, path, m0.copy(
-          gens = if (emptied) Nil else Seq(gen), cooling = cooling))
-        StoreFiles.sweepGenerations(spark, rowsRoot(path), keep)
+        lg.compact(spark, m0, if (emptied) None else Some(gen))(identity)
         removed
       }
     }
   }
 
+  /** Rewrite the committed generations as one (rows are already one per
+    * partition — this coalesces FILES, not semantics). Atomic flip;
+    * superseded generations cool for `graft.ledger.gcGraceMs` (default
+    * 15 min) before the sweep, so lock-free readers survive. */
   def compact(spark: SparkSession, path: String): Unit = {
-    val m0 = readManifest(spark, path)
+    val lg = genLog(path)
+    val m0 = lg.read(spark)
     val all = rows(spark, path)
-    val gen = StoreFiles.nextGenName(spark, Seq(rowsRoot(path)), m0.gens)
+    val gen = lg.nextGen(spark, m0, None)
     all.coalesce(1).write.mode("overwrite").parquet(genPath(path, gen))
-    val graceMs = spark.conf.getOption("graft.ledger.gcGraceMs")
-      .map(_.toLong).getOrElse(15L * 60 * 1000)
-    val (cooling, keep) = StoreFiles.coolingStep(m0.cooling, m0.gens.toSet,
-      gen, graceMs, System.currentTimeMillis())
-    writeManifest(spark, path, m0.copy(gens = Seq(gen), cooling = cooling))
-    StoreFiles.sweepGenerations(spark, rowsRoot(path), keep)
+    lg.compact(spark, m0, Some(gen))(identity)
   }
 }

@@ -386,139 +386,46 @@ class AnnIndexSpec extends SparkSpec {
     assert(AnnStore.codes(spark, tmp).count() == total - 10)
   }
 
-  test("AnnStore legacy-layout adoption: flat codes + markers upgrade to manifest gens, marks preserved") {
-    // r11: a store written by the pre-manifest layout (flat
-    // v1/codes/cell=C + _batches markers) first fails LOUDLY with the
-    // upgrade named, then adoptLegacyCodes converts it in place — pure
-    // renames, marker high-water marks folded into the manifest so
-    // pre-upgrade batches still replay as no-ops.
+  test("AnnStore pre-manifest codes layout is refused; a legacy-tag mark migrates") {
+    // a store written by the pre-manifest layout (flat v1/codes/cell=C
+    // + _batches markers) has no codes manifest: reads refuse loudly,
+    // naming the layout, instead of serving or guessing at generations
     import graft.ext.{AnnStore, StoreFiles}
     val tmp = java.nio.file.Files.createTempDirectory("graft-annstore-L").toString
     val idx = Similarity.trainIvfPq(emb, "vec_id", "embedding",
       nCentroids = 16, m = 8, ksub = 16)
     val base = emb.filter(col("vec_id") < 300)
-    // hand-craft the legacy layout
     Similarity.encodeAndWritePartitioned(base, "vec_id", "embedding", idx,
       s"$tmp/v1/codes")
     StoreFiles.writeUtf8Atomic(spark, s"$tmp/v1/index.json", idx.toJson)
     StoreFiles.writeUtf8Atomic(spark, s"$tmp/current.json",
       """{"format":"graft-ann-store","current":1}""")
-    Seq("crawl-b0", "crawl-b1", "side.feed-b4").foreach(nm =>
-      StoreFiles.writeUtf8Atomic(spark, s"$tmp/_batches/$nm", "done"))
-    // pre-adoption reads fail loud, naming the situation
     val e = intercept[IllegalArgumentException] {
       AnnStore.codes(spark, tmp).count()
     }
-    assert(e.getMessage.contains("predates"), e.getMessage)
-    // adopt: codes land under g0, counts preserved, serve works
-    assert(AnnStore.adoptLegacyCodes(spark, tmp))
-    val n = base.count()
-    assert(AnnStore.codes(spark, tmp).count() == n)
-    assert(java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$tmp/v1/codes/g0")))
-    assert(!java.nio.file.Files.exists(
-      java.nio.file.Paths.get(s"$tmp/_batches")))
-    assert(AnnStore.serve(tmp, base, "vec_id", "embedding",
-      queries, "qid", "qv", k = 3, nProbe = 12).collect().nonEmpty)
-    // marker marks survive: a pre-upgrade batch re-delivery no-ops…
-    val batch = emb.filter(col("vec_id") >= 300 && col("vec_id") < 320)
-    assert(!AnnStore.appendBatch(batch, "vec_id", "embedding", tmp, "crawl", 1L))
-    assert(AnnStore.codes(spark, tmp).count() == n)
-    // …and the next batch id commits normally
-    assert(AnnStore.appendBatch(batch, "vec_id", "embedding", tmp, "crawl", 2L))
-    assert(AnnStore.codes(spark, tmp).count() == n + batch.count())
-    // adoption is idempotent
-    assert(!AnnStore.adoptLegacyCodes(spark, tmp))
+    assert(e.getMessage.contains("pre-manifest store layouts are not supported"),
+      e.getMessage)
     // r12: legacy-tag mark migration (same contract as the BM25 store) —
     // a pre-r11 '_'-leading tag's horizon moves to a writer-valid tag
-    val manP = s"$tmp/v1/codes-manifest.json"
+    val tmp2 = java.nio.file.Files.createTempDirectory("graft-annstore-M").toString
+    AnnStore.create(base, "vec_id", "embedding", idx, tmp2)
+    val batch = emb.filter(col("vec_id") >= 300 && col("vec_id") < 320)
+    assert(AnnStore.appendBatch(batch, "vec_id", "embedding", tmp2, "crawl", 2L))
+    assert(AnnStore.appendBatch(batch.limit(1), "vec_id", "embedding", tmp2,
+      "side.feed", 4L))
+    val manP = s"$tmp2/v1/codes-manifest.json"
     val man = StoreFiles.readUtf8(spark, manP)
     StoreFiles.writeUtf8Atomic(spark, manP,
       man.replace("\"crawl\":", "\"_crawl\":"))
     intercept[IllegalArgumentException] {
-      AnnStore.appendBatch(batch, "vec_id", "embedding", tmp, "_crawl", 3L)
+      AnnStore.appendBatch(batch, "vec_id", "embedding", tmp2, "_crawl", 3L)
     }
-    AnnStore.renameStreamMark(spark, tmp, "_crawl", "crawl2")
-    assert(!AnnStore.appendBatch(batch, "vec_id", "embedding", tmp,
+    AnnStore.renameStreamMark(spark, tmp2, "_crawl", "crawl2")
+    assert(!AnnStore.appendBatch(batch, "vec_id", "embedding", tmp2,
       "crawl2", 2L), "migrated mark lost the replay horizon")
     intercept[IllegalArgumentException] { // never overwrite an existing mark
-      AnnStore.renameStreamMark(spark, tmp, "crawl2", "side.feed")
+      AnnStore.renameStreamMark(spark, tmp2, "crawl2", "side.feed")
     }
-    // a MANIFEST-GOVERNED store that lost its manifest is NOT adoptable:
-    // generation-shaped children must refuse loudly (adopting would drop
-    // generations and marks), never guess
-    val tmp2 = java.nio.file.Files.createTempDirectory("graft-annstore-NL").toString
-    AnnStore.create(base, "vec_id", "embedding", idx, tmp2)
-    AnnStore.appendBatch(batch, "vec_id", "embedding", tmp2, "crawl", 0L)
-    java.nio.file.Files.delete(
-      java.nio.file.Paths.get(s"$tmp2/v1/codes-manifest.json"))
-    val e2 = intercept[IllegalArgumentException] {
-      AnnStore.adoptLegacyCodes(spark, tmp2)
-    }
-    assert(e2.getMessage.contains("not the legacy"), e2.getMessage)
-  }
-
-  test("AnnStore adoption resume: partial g0 beside an authoritative staging dir loses no codes (r12)") {
-    // The r11 layout published staged cells with one whole-tree
-    // rename(codes-adopting -> g0); on a copy-then-delete filesystem a
-    // crash mid-copy leaves a PARTIAL g0 while codes-adopting still holds
-    // everything. The r11 resume guard (`if (!exists(g0)) move`) would
-    // publish a manifest over the partial g0 — silent codes loss. The r12
-    // resume must merge staging into g0 first and delete staging only
-    // after the manifest write.
-    import graft.ext.{AnnStore, StoreFiles}
-    import java.nio.file.{Files, Paths, Path => JPath, StandardCopyOption}
-    val tmp = java.nio.file.Files.createTempDirectory("graft-annstore-R").toString
-    val idx = Similarity.trainIvfPq(emb, "vec_id", "embedding",
-      nCentroids = 16, m = 8, ksub = 16)
-    val base = emb.filter(col("vec_id") < 300)
-    Similarity.encodeAndWritePartitioned(base, "vec_id", "embedding", idx,
-      s"$tmp/v1/codes")
-    StoreFiles.writeUtf8Atomic(spark, s"$tmp/v1/index.json", idx.toJson)
-    StoreFiles.writeUtf8Atomic(spark, s"$tmp/current.json",
-      """{"format":"graft-ann-store","current":1}""")
-    // simulate the crashed pre-r12 attempt: every cell fully staged…
-    val root = Paths.get(s"$tmp/v1/codes")
-    val staging = Paths.get(s"$tmp/v1/codes-adopting")
-    Files.createDirectories(staging)
-    val cells = Files.list(root).toArray.map(_.asInstanceOf[JPath])
-      .filter(_.getFileName.toString.startsWith("cell="))
-    assert(cells.length > 1, "need multiple cells to stage")
-    cells.foreach(c => Files.move(c, staging.resolve(c.getFileName)))
-    // …then the whole-tree rename crashed mid-copy: g0 holds one complete
-    // cell and one PARTIAL cell (a data file missing), sources intact
-    val g0 = root.resolve("g0")
-    def copyTree(src: JPath, dst: JPath): Unit = {
-      Files.createDirectories(dst)
-      Files.list(src).toArray.map(_.asInstanceOf[JPath]).foreach { p =>
-        if (Files.isDirectory(p)) copyTree(p, dst.resolve(p.getFileName))
-        else Files.copy(p, dst.resolve(p.getFileName),
-          StandardCopyOption.REPLACE_EXISTING)
-      }
-    }
-    val staged = Files.list(staging).toArray.map(_.asInstanceOf[JPath])
-      .filter(_.getFileName.toString.startsWith("cell="))
-    assert(staged.length > 2, "need >2 staged cells for both crash shapes")
-    copyTree(staged(0), g0.resolve(staged(0).getFileName))
-    copyTree(staged(1), g0.resolve(staged(1).getFileName))
-    val partial = Files.list(g0.resolve(staged(1).getFileName)).toArray
-      .map(_.asInstanceOf[JPath]).filter(_.toString.endsWith(".parquet"))
-    partial.foreach(Files.delete) // the mid-copy hole
-    // …and the OPPOSITE crash shape (review finding): cell 2's copy
-    // COMPLETED and the crash hit the source delete — g0 holds the
-    // complete copy, staging a partially-deleted remnant. The resume
-    // must keep the complete g0 copy, not clobber it with the remnant.
-    copyTree(staged(2), g0.resolve(staged(2).getFileName))
-    val remnant = Files.list(staged(2)).toArray
-      .map(_.asInstanceOf[JPath]).filter(_.toString.endsWith(".parquet"))
-    assert(remnant.nonEmpty)
-    Files.delete(remnant(0)) // the mid-delete hole, in STAGING this time
-    // adoption must recover every staged cell, not trust the partial g0
-    assert(AnnStore.adoptLegacyCodes(spark, tmp))
-    assert(AnnStore.codes(spark, tmp).count() == base.count())
-    assert(!Files.exists(staging), "staging dir must be gone after adoption")
-    // idempotent rerun still no-ops
-    assert(!AnnStore.adoptLegacyCodes(spark, tmp))
   }
 
   test("AnnStore codes compaction collapses per-append files; serve identical; old versions droppable") {

@@ -1019,6 +1019,38 @@ class ExtSpec extends SparkSpec {
     assert(sGot == sWant && sGot.nonEmpty)
   }
 
+  test("dedup: streamed MinHash append reads a nondeterministic caller frame once — published generations agree") {
+    // the batch text depends on rand(), so every evaluation of the
+    // caller's frame draws different shingles: the three concurrent
+    // staging writes agree only if they read ONE materialized frame
+    val docs = spark.range(400).select(col("id").as("doc_id"),
+      concat(lit("crawl page "), col("id"), lit(" on topic "),
+        (col("id") % 7).cast("string"), lit(" with the usual boilerplate")
+      ).as("text"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-mhrand").toString
+    Dedup.buildMinHashStore(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
+      "doc_id", "text", tmp)
+    val batch = docs.filter(pmod(col("doc_id"), lit(2)) === 1)
+      .select(col("doc_id"), concat(col("text"), lit(" "),
+        (rand() * 1e9).cast("long").cast("string")).as("text"))
+    assert(Dedup.appendBatchToMinHashStore(batch, "doc_id", "text", tmp,
+      "rnd", 0L))
+    val sh = spark.read.parquet(s"$tmp/shingles/rnd-b0")
+    val bandRows = spark.read.parquet(s"$tmp/rows/rnd-b0")
+    val derived = sh
+      .withColumn("sig", Dedup.minhashSignature(col("sh"), 64))
+      .select(col("id"), explode(Dedup.bandKeys(col("sig"), 16, 4)).as("bk"))
+      .select(col("bk.band").as("band"), col("bk.bucket").as("bucket"),
+        col("id"))
+    assert(bandRows.count() > 0L && bandRows.count() == derived.count())
+    assert(bandRows.exceptAll(derived).isEmpty,
+      "published rows disagree with the published shingles")
+    val counts = spark.read.parquet(s"$tmp/bucket_counts/rnd-b0")
+    assert(counts.exceptAll(bandRows.groupBy("band", "bucket")
+      .agg(count(lit(1)).as("n"))).isEmpty,
+      "published bucket counts disagree with the published rows")
+  }
+
   test("dedup: MinHash store build bounds each table's file count (r20 — wide-input builds must not fragment)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")

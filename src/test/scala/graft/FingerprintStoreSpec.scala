@@ -163,7 +163,7 @@ class FingerprintStoreSpec extends SparkSpec {
     assert(scrubbed() == want)
   }
 
-  test("streamed appendBatch: re-delivered (tag, batchId) commits once; legacy v1 layout adopts in place (r12)") {
+  test("streamed appendBatch: re-delivered (tag, batchId) commits once; pre-manifest v1 layout is refused") {
     val dir = tmp()
     FingerprintStore.build(corpus, "text", dir)
     val batch = Seq((70L, "streamed crawl content")).toDF("doc_id", "text")
@@ -180,9 +180,8 @@ class FingerprintStoreSpec extends SparkSpec {
     FingerprintStore.compact(spark, dir)
     assert(!FingerprintStore.appendBatch(batch, "text", dir, "crawl", 0L))
     assert(dropped() == 0L)
-    // v1 layout (flat fps files + meta.json) adopts in place: downgrade a
-    // fresh v2 store by hand, then adoptLegacy must restore service with
-    // identical membership
+    // v1 layout (flat fps files + meta.json, no manifest): downgrade a
+    // fresh store by hand — every read refuses loudly, naming the layout
     val dir2 = tmp()
     FingerprintStore.build(corpus, "text", dir2)
     val g0 = java.nio.file.Paths.get(s"$dir2/fps/g0")
@@ -199,10 +198,8 @@ class FingerprintStoreSpec extends SparkSpec {
     val e = intercept[IllegalArgumentException] {
       FingerprintStore.scrub(corpus, "text", dir2).count()
     }
-    assert(e.getMessage.contains("adoptLegacy"), e.getMessage)
-    assert(FingerprintStore.adoptLegacy(spark, dir2))
-    assert(FingerprintStore.scrub(corpus, "text", dir2).count() == 0L)
-    assert(!FingerprintStore.adoptLegacy(spark, dir2)) // idempotent
+    assert(e.getMessage.contains("pre-manifest store layouts are not supported"),
+      e.getMessage)
   }
 
   test("manifest sentinel: a non-store directory is refused on append") {

@@ -106,7 +106,7 @@ class SketchStoreSpec extends SparkSpec {
       Seq("k", "n_rows", "sketch", "batch"))
   }
 
-  test("manifest protocol: orphan gens invisible, streamed appendBatch exactly-once, legacy adoption (r12)") {
+  test("manifest protocol: orphan gens invisible, streamed appendBatch exactly-once, pre-manifest layout refused") {
     val df = spark.range(2000)
       .select((col("id") % 2).cast("string").as("k"), (col("id") % 300).as("v"))
     val dir = tmp()
@@ -132,17 +132,15 @@ class SketchStoreSpec extends SparkSpec {
     assert(after1 != want)
     assert(!SketchStore.appendBatch(inc, dir, "b1", "s1", 0L))
     assert(est() == after1, "retried streamed batch double-committed")
-    // legacy v1 layout (bare parquet dir) fails loud, adopts in place
+    // legacy v1 layout (bare parquet dir, no manifest) refuses loudly
     val dir2 = tmp()
     SketchStore.distinctSketch(df, Seq("k"), "v")
       .withColumn("batch", lit("legacy")).write.mode("overwrite").parquet(dir2)
     val e = intercept[IllegalArgumentException] {
       SketchStore.estimate(spark, dir2, Seq("k")).count()
     }
-    assert(e.getMessage.contains("adoptLegacy"), e.getMessage)
-    assert(SketchStore.adoptLegacy(spark, dir2))
-    assert(SketchStore.estimate(spark, dir2, Seq("k")).count() == 2L)
-    assert(!SketchStore.adoptLegacy(spark, dir2)) // idempotent
+    assert(e.getMessage.contains("pre-manifest store layouts are not supported"),
+      e.getMessage)
   }
 
   test("retractBatch: whole-batch drop is exact; refuses after compaction; unknown labels honest (r15)") {

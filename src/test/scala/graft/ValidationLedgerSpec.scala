@@ -709,4 +709,27 @@ class ValidationLedgerSpec extends SparkSpec {
     intercept[RuntimeException](
       ValidationLedger.validateIncrement(schema2, corpus, "part", dir, "b7"))
   }
+
+  test("a check contract holding a backslash or a quote round-trips through the manifest") {
+    // contract entries are `column:check.described`, so a str_matches
+    // pattern with `\d` on a column whose name holds `"` lands verbatim
+    // in the manifest — the next commit must read it back
+    val dir = tmp()
+    val c = "co\"de"
+    val sch = DataFrameSchema(
+      "part" -> ColumnSchema.of(StringType),
+      c -> ColumnSchema.of(StringType, Check.strMatches("^\\d+$")))
+    def batch(p: String) = spark.range(10).select(lit(p).as("part"),
+      when(col("id") === 0L, lit("x")).otherwise(col("id").cast("string"))
+        .as(c))
+    for ((p, b) <- Seq("p0" -> "b1", "p1" -> "b2"))
+      assert(ValidationLedger.validateIncrement(sch, batch(p), "part", dir,
+        b).count() == 1L)
+    val st = ValidationLedger.status(spark, dir).collect()
+    assert(st.map(_.getString(0)).toSeq == Seq("p0", "p1"))
+    val label = st.head.getAs[Map[String, Long]](3).keys
+      .find(_.contains("\\d")).get
+    assert(label.startsWith(c + ":"), label)
+    assert(st.forall(_.getAs[Map[String, Long]](3)(label) == 1L))
+  }
 }
