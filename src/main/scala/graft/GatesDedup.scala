@@ -293,8 +293,7 @@ private[graft] object GatesDedup {
         docs.filter(pmod(col("doc_id"), lit(3)) === 1), "doc_id", "text", dir)
       ext.Dedup.appendToMinHashStore(
         docs.filter(pmod(col("doc_id"), lit(3)) === 2), "doc_id", "text", dir)
-      def files() = Seq("bucket_counts", "rows", "shingles")
-        .map(sub => ext.StoreFiles.dataFileCount(s, s"$dir/$sub")).sum
+      def files() = ext.Dedup.minhashStoreFileCount(s, dir)
       val filesBefore = files()
       ext.Dedup.compactMinHashStore(s, dir)
       require(files() < filesBefore,

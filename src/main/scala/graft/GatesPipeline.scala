@@ -359,10 +359,10 @@ private[graft] object GatesPipeline {
       // 2. exact scrub against the fingerprint store (no corpus text read)
       val afterExact = ext.FingerprintStore.scrub(valid, "text", fpDir)
       // 3. near-dup scrub against the MinHash store. Eager localCheckpoint
-      // (r15): the takedown leg's compactMinHashStore swaps the store's
-      // dirs (no cooling window on this pre-manifest store), so the scrub
-      // verdict must be pinned before then — it is also re-used by the
-      // appends, the union pins, the ledger and the disposition table
+      // (r15): the takedown leg retracts from and compacts this store, so
+      // a lazily re-evaluated scrub would answer differently afterwards —
+      // the verdict is pinned here and re-used by the appends, the union
+      // pins, the ledger and the disposition table
       val survivors = ext.Dedup.dropExistingNearDupStore(afterExact, "id",
         "text", mhDir).localCheckpoint(true)
       // 4. store appends + in-gate consistency pins

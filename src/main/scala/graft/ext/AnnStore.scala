@@ -65,7 +65,7 @@ object AnnStore {
   private def genLog(path: String, v: Int) = GenerationLog(
     s"$path/v$v/codes-manifest.json", "graft-ann-codes", 1,
     s"ANN store at $path v$v", Seq(codesPath(path, v)),
-    Some(tombsPath(path, v)), "graft.ann.gcGraceMs")
+    Some(tombsPath(path, v)))
 
   /** The live version number named by the pointer. All metadata IO rides
     * the Hadoop FS (r9 review fix) so the store works on local disk,
@@ -240,7 +240,7 @@ object AnnStore {
   /** The CURRENT manifest's live code-generation directories — what a
     * serve's listing actually reads. A raw directory listing is WRONG
     * after a compaction: superseded generations cool on disk for
-    * `graft.ann.gcGraceMs` but are invisible to readers (r17 review —
+    * `graft.store.gcGraceMs` but are invisible to readers (r17 review —
     * the ANN soak's listed-bytes fraction summed over the raw listing
     * and misrepresented pruning for the whole post-compaction tail). */
   def liveCodeGenPaths(spark: SparkSession, path: String): Seq[String] = {
@@ -478,7 +478,7 @@ object AnnStore {
     * (the store stays serveable through every crash window). Stream marks
     * survive. GC follows the BM25 cooling ledger: crash orphans delete
     * immediately, superseded generations survive until they are at least
-    * `graft.ann.gcGraceMs` old (default 15 min) — safe against
+    * `graft.store.gcGraceMs` old (default 15 min) — safe against
     * back-to-back compactions with lock-free in-flight serves. */
   def compactCodes(spark: SparkSession, path: String): Unit = {
     val v = currentVersion(spark, path)

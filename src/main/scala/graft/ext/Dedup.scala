@@ -586,19 +586,24 @@ object Dedup {
     * explodes corpus ids — incoming×corpus pairs only, never corpus×corpus.
     * Shuffles carry (band, bucket, id); shingles re-attach pruned to
     * candidates for the Jaccard verify. */
-  /** (idAlias, sh, band, bucket) LSH band rows for one side — the shared
-    * banding of the direct incremental path and the persisted store, so
-    * "store ≡ direct" holds by construction. */
+  /** (idAlias, sh, band, bucket) LSH band rows for one side's text. */
   private def bandedSide(df: DataFrame, idCol: String, textCol: String,
-      idAlias: String, shingleK: Int, numHashes: Int, bands: Int): DataFrame = {
+      idAlias: String, shingleK: Int, numHashes: Int, bands: Int): DataFrame =
+    bandRows(df.select(q(idCol).as(idAlias),
+      shingles(q(textCol), shingleK).as("sh")), idAlias, numHashes, bands)
+
+  /** (idAlias, sh, band, bucket) LSH band rows of an (idAlias, sh) shingle
+    * frame — the one banding of the direct incremental path, the store's
+    * writes and its serve, so "store ≡ direct" holds by construction. */
+  private def bandRows(sh: DataFrame, idAlias: String, numHashes: Int,
+      bands: Int): DataFrame = {
     // mirror minhashPairs' loud refusal (r18 review: the incremental side
     // silently truncated the signature when bands did not divide
     // numHashes — and banded NOTHING at all for bands > numHashes, so
     // scrubs dropped zero rows with no error)
     require(bands >= 1 && numHashes / bands * bands == numHashes,
       "bands must divide numHashes")
-    df.select(q(idCol).as(idAlias), shingles(q(textCol), shingleK).as("sh"))
-      .withColumn("sig", minhashSignature(col("sh"), numHashes))
+    sh.withColumn("sig", minhashSignature(col("sh"), numHashes))
       .select(col(idAlias), col("sh"),
         explode(bandKeys(col("sig"), bands, numHashes / bands)).as("bk"))
       .select(col(idAlias), col("sh"),
@@ -662,296 +667,203 @@ object Dedup {
   // corpus's shingle sets and LSH band rows are computed ONCE, materialized
   // to parquet, and every subsequent crawl batch scrubs against the store
   // without touching corpus text again. Layout under `path`:
-  //   shingles/      (id, sh)            — append-only, one row per doc
-  //   rows/          (band, bucket, id)  — append-only LSH band rows
-  //   bucket_counts/ (band, bucket, n)   — append-only COUNT DELTAS; serve
-  //                  sums them (distinct-bucket-sized, ≪ corpus) so the
-  //                  oversized-bucket skip never aggregates the rows table
-  //   params.json    shingleK / numHashes / bands — serve-time validation
-  // Appending a batch appends to all three and never rewrites history.
+  //   manifest.json          the GenerationLog manifest: the frozen
+  //                          shingle_k / num_hashes / bands, gens[],
+  //                          marks{}, cooling{}, tombs[], tombcooling{}
+  //   shingles/<gen>/        (id, sh)            one row per doc
+  //   rows/<gen>/            (band, bucket, id)  LSH band rows
+  //   bucket_counts/<gen>/   (band, bucket, n)   COUNT DELTAS; serve sums
+  //                          them (distinct-bucket-sized, ≪ corpus) so the
+  //                          oversized-bucket skip never aggregates rows
+  //   tombs/<gen>/           (id)                retracted ids
+  // The three tables share ONE generation name per commit and one
+  // manifest replace publishes them together (the BM25 index's three
+  // sides, same shape): no reader ever sees shingles without their band
+  // rows, or band rows without their count deltas. Appending a batch adds
+  // a generation and never rewrites history.
 
-  /** One reader for the store's three append-only tables: recursive, so
-    * flat legacy files (pre-r16 appends, post-compaction rewrites) and
-    * the r16 streamed appends' `<tag>-b<id>` generation subdirs serve
-    * together; hidden staging (`.stage-*`) stays invisible, exactly as
-    * Spark's file index treats hidden paths. */
-  private def readMinhashTable(spark: SparkSession, dir: String): DataFrame =
-    spark.read.option("recursiveFileLookup", "true").parquet(dir)
+  private val minhashTables = Seq("shingles", "rows", "bucket_counts")
 
-  private def minhashStoreParams(spark: SparkSession,
-      path: String): (Int, Int, Int) = {
-    // Hadoop-FS read like every other store file (r18 review: java.nio
-    // resolved s3a://... as a local relative path, so the store could
-    // neither be built nor served on any non-local filesystem despite
-    // the object-store framing of the surrounding docs)
-    val jackson = new com.fasterxml.jackson.databind.ObjectMapper()
-    val root = jackson.readValue(
-      StoreFiles.readUtf8(spark, s"$path/params.json"),
-      classOf[java.util.Map[String, Any]])
-    require(String.valueOf(root.get("format")) == "graft-minhash-store",
-      s"not a MinHash store: $path")
-    def num(k: String) = root.get(k).asInstanceOf[java.lang.Number].intValue()
-    (num("shingle_k"), num("num_hashes"), num("bands"))
-  }
+  private def minhashLog(path: String) = GenerationLog(s"$path/manifest.json",
+    "graft-minhash-store", 1, s"MinHash store at $path",
+    minhashTables.map(t => s"$path/$t"), Some(s"$path/tombs"))
 
-  private def minhashStoreWrite(docs: DataFrame, idCol: String,
-      textCol: String, path: String, shingleK: Int, numHashes: Int,
-      bands: Int, mode: String): Unit = {
-    val spark = docs.sparkSession
+  /** (shingle_k, num_hashes, bands) — frozen at build. */
+  private def minhashParams(m: GenerationLog.Manifest): (Int, Int, Int) =
+    (m.long("shingle_k").toInt, m.long("num_hashes").toInt,
+      m.long("bands").toInt)
+
+  /** One table across the given generations, as ONE multi-path load:
+    * the generations are flat (unpartitioned) directories, and every
+    * separate load would pay its own footer-reading schema-inference job.
+    * Every commit lists a generation (an empty batch's holds a
+    * schema-only file), so a store's `gens` is never empty. */
+  private def readMinhashTable(spark: SparkSession, path: String,
+      table: String, gens: Seq[String]): DataFrame =
+    spark.read.parquet(gens.map(g => s"$path/$table/$g"): _*)
+
+  /** Stage generation `gen` of all three tables from `docs` — invisible
+    * until the caller's manifest replace lists it; mode overwrite reclaims
+    * a crashed attempt's orphan at the same name. The band-row source
+    * differs by caller:
+    *  - build (`pin = false`): write the corpus-scale shingles, then derive
+    *    the band rows from the just-written parquet — one extra compact
+    *    columnar scan instead of caching a corpus-sized frame;
+    *  - append (`pin = true`): the batch's shingle frame is pinned with an
+    *    EAGER localCheckpoint, so the three concurrent writes (guide §2.6
+    *    — a KB-scale append's cost is its jobs' fixed latency) read the
+    *    SAME blocks. A lazy pin would let each write compute the caller's
+    *    frame itself, and a nondeterministic caller frame could then
+    *    publish shingles and band rows that disagree; a lost block fails
+    *    the job loudly instead of silently recomputing. */
+  private def writeMinhashGen(docs: DataFrame, idCol: String,
+      textCol: String, path: String, gen: String, shingleK: Int,
+      numHashes: Int, bands: Int, pin: Boolean): Unit = {
     // ids keep their ORIGINAL type (string url keys included) — a cast
     // would null them out and silently empty the store
     val shingled = docs.select(q(idCol).as("id"),
       shingles(q(textCol), shingleK).as("sh"))
-    // the band-row source differs by mode (r18 review):
-    //  - build (overwrite): write the corpus-scale shingles, then read the
-    //    just-written parquet back — one extra compact-columnar scan
-    //    instead of caching a corpus-sized frame;
-    //  - append: derive from the BATCH's own persisted frame — the former
-    //    readback + left-semi re-read the ENTIRE accumulated shingles
-    //    table per incremental batch (O(store) I/O for a KB-scale
-    //    append; the streamed twin already derives from its own
-    //    generation only). shingles/minhash are deterministic in the
-    //    text, so the persisted frame and the written parquet agree.
-    def rowsOf(src: DataFrame): DataFrame = src
-      .withColumn("sig", minhashSignature(col("sh"), numHashes))
-      .select(col("id"),
-        explode(bandKeys(col("sig"), bands, numHashes / bands)).as("bk"))
-      .select(col("bk.band").as("band"), col("bk.bucket").as("bucket"), col("id"))
-    if (mode == "append") {
-      // r20 (r19 verdict #1b): the three per-batch writes are INDEPENDENT
-      // Spark actions — rows/counts derive from the PERSISTED frames, not
-      // from the written files — and a KB-scale append's cost is 3-4
-      // sequential jobs' fixed scheduling+commit latency, not executor
-      // work (~0.8 s CPU per 8-append bench section against ~9-12 s
-      // wall). Overlap them (guide §2.6); the cached parents make the
-      // shared compute run once, block-locked, whichever job gets there
-      // first. Failure leaves the same partial-files window the
-      // sequential form had (this legacy append has no crash contract —
-      // the streamed twin below is the resumable path).
-      val cached = shingled.persist()
-      val rows = rowsOf(cached).persist()
-      try {
-        StoreFiles.runConcurrently(Seq(
-          () => cached.write.mode(mode).parquet(s"$path/shingles"),
-          () => rows.write.mode(mode).parquet(s"$path/rows"),
-          () => rows.groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-            .write.mode(mode).parquet(s"$path/bucket_counts")))
-      } finally {
-        rows.unpersist()
-        cached.unpersist(): Unit
-      }
+    def write(df: DataFrame, table: String): () => Unit =
+      () => df.write.mode("overwrite").parquet(s"$path/$table/$gen")
+    def rowsOf(src: DataFrame): DataFrame = bandRows(src, "id", numHashes,
+      bands).select(col("band"), col("bucket"), col("id"))
+    def rowsAndCounts(rows: DataFrame): Seq[() => Unit] =
+      Seq(write(rows, "rows"), write(rows.groupBy("band", "bucket")
+        .agg(count(lit(1)).as("n")), "bucket_counts"))
+    if (pin) {
+      val src = shingled.localCheckpoint(true)
+      try StoreFiles.runConcurrently(
+        write(src, "shingles") +: rowsAndCounts(rowsOf(src)))
+      finally dropCheckpointBlocks(src)
     } else {
-      // build: write the corpus-scale shingles first (the rows derive
-      // from the just-written parquet — one extra compact-columnar scan
-      // instead of caching a corpus-sized frame), then the two
-      // rows-derived writes overlap (both read the persisted band rows)
-      shingled.write.mode(mode).parquet(s"$path/shingles")
-      val rows = rowsOf(readMinhashTable(spark, s"$path/shingles")).persist()
-      try {
-        StoreFiles.runConcurrently(Seq(
-          () => rows.write.mode(mode).parquet(s"$path/rows"),
-          () => rows.groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-            .write.mode(mode).parquet(s"$path/bucket_counts")))
-      } finally rows.unpersist(): Unit
+      write(shingled, "shingles")()
+      val rows = rowsOf(docs.sparkSession.read.parquet(s"$path/shingles/$gen"))
+        .persist()
+      try StoreFiles.runConcurrently(rowsAndCounts(rows))
+      finally rows.unpersist(): Unit
     }
   }
 
-  /** Bound a just-built store table's file count to the compaction
-    * target (~128 MB/file — [[StoreFiles.targetFileCount]]): the spread
-    * 10× build (r19) writes `shingles` at the INPUT's partitioning — one
-    * file per input partition, 32 sub-MB files at bench scale — and
-    * every downstream scrub/compact then pays per-file listing + footer
-    * + open-cost overhead (the r19 verdict's store-read regression
-    * cluster; per-table file counts in tools/R20Probe). The build-time
-    * coalesce rewrite is a pure file-count rewrite of freshly written
-    * compact columnar bytes and SKIPS itself once files approach the
-    * target size — a 100 TB build whose scan tasks already emit
-    * ~100 MB files rewrites nothing (scale-adaptive, no constant tuned
-    * to local mode). Guide §6: small files hurt every later reader; fix
-    * the layout where it is created. */
-  private def boundStoreTableFiles(spark: SparkSession, dir: String): Unit = {
-    val files = StoreFiles.dataFileCountRecursive(spark, dir)
-    val tgt = StoreFiles.targetFileCount(StoreFiles.dataBytesRecursive(spark, dir))
-    if (files > math.max(2 * tgt, 2)) {
-      readMinhashTable(spark, dir)
-        .coalesce(tgt).write.mode("overwrite").parquet(dir + ".compacting")
-      StoreFiles.swapDir(spark, dir + ".compacting", dir)
+  /** Compaction's rewrite: the three tables of the `src` generations,
+    * minus the retracted ids, into ONE staged generation `gen`. The
+    * per-append count deltas collapse into one summed snapshot — or, with
+    * live tombstones, recompute from the SCRUBBED band rows (compaction is
+    * the physical-erasure point) — and `rows` / `shingles` rewrite into
+    * size-targeted files (default ~128 MB). repartition for the counts,
+    * NOT coalesce: coalesce would fold the aggregation's reduce side down
+    * to the output file count; the row/shingle rewrites have no
+    * aggregation to starve, and their task count (bytes / 128 MB) scales
+    * with the store. The sources are never deleted under the rewrite, so
+    * the three writes overlap (guide §2.6). */
+  private def rewriteMinhashGen(spark: SparkSession, path: String,
+      src: Seq[String], tomb: Option[DataFrame], gen: String,
+      targetFiles: Int): Unit = {
+    def target(table: String): Int =
+      if (targetFiles > 0) targetFiles
+      else StoreFiles.targetFileCount(src.map(g =>
+        StoreFiles.dataBytesRecursive(spark, s"$path/$table/$g")).sum)
+    def scrubbed(table: String): DataFrame = {
+      val df = readMinhashTable(spark, path, table, src)
+      tomb.fold(df)(t => df.join(broadcast(t), Seq("id"), "left_anti"))
     }
+    val counts = tomb match {
+      case None => readMinhashTable(spark, path, "bucket_counts", src)
+        .groupBy("band", "bucket").agg(sum("n").as("n"))
+      case Some(_) => scrubbed("rows")
+        .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
+    }
+    def write(df: DataFrame, table: String): () => Unit =
+      () => df.write.mode("overwrite").parquet(s"$path/$table/$gen")
+    StoreFiles.runConcurrently(Seq(
+      write(counts.repartition(target("bucket_counts")), "bucket_counts"),
+      write(scrubbed("rows").coalesce(target("rows")), "rows"),
+      write(scrubbed("shingles").coalesce(target("shingles")), "shingles")))
   }
 
   /** Build a persisted MinHash store from a corpus (one corpus scan plus
-    * one scan of the materialized shingles). */
+    * one scan of the materialized shingles) and publish it with one
+    * manifest write; a build over an existing store replaces it.
+    *
+    * The build stages one generation (g0 in a fresh directory) and bounds
+    * its file count (r20, r19 verdict #1a): a wide input writes
+    * `shingles` at the INPUT's partitioning — one sub-MB file per input
+    * partition at bench scale — and every later scrub/compact would pay
+    * per-file listing, footer and open cost. When a table of the staged
+    * generation holds more than twice the compaction target's file count,
+    * compaction's rewrite turns it into the published generation and the
+    * staged one — never listed, so no reader saw it — is deleted. Production-sized files skip the rewrite (scale-adaptive, no
+    * constant tuned to local mode). Guide §6: fix the layout where it is
+    * created. */
   def buildMinHashStore(corpus: DataFrame, idCol: String, textCol: String,
       path: String, shingleK: Int = 3, numHashes: Int = 64,
       bands: Int = 16): Unit = {
     require(numHashes % bands == 0, "numHashes must divide into bands")
-    minhashStoreWrite(corpus, idCol, textCol, path, shingleK, numHashes,
-      bands, "overwrite")
-    // r20 (r19 verdict #1a): bound each table's file count at build time
-    // (see boundStoreTableFiles — no-op once files are production-sized).
-    // The three rewrites touch disjoint dirs, so they overlap (guide
-    // §2.6); they must all run AFTER minhashStoreWrite returns — the
-    // rows/counts jobs read the shingles files a concurrent shingles
-    // swap would delete mid-scan.
-    StoreFiles.runConcurrently(Seq("shingles", "rows", "bucket_counts")
-      .map(t => () => boundStoreTableFiles(corpus.sparkSession, s"$path/$t")))
-    val json = s"""{"format":"graft-minhash-store","shingle_k":$shingleK,"num_hashes":$numHashes,"bands":$bands}"""
-    StoreFiles.writeUtf8Atomic(corpus.sparkSession, s"$path/params.json", json)
+    val spark = corpus.sparkSession
+    val lg = minhashLog(path)
+    val staged = StoreFiles.nextGenName(spark, lg.roots, Nil)
+    writeMinhashGen(corpus, idCol, textCol, path, staged, shingleK,
+      numHashes, bands, pin = false)
+    val fragmented = minhashTables.exists { t =>
+      val dir = s"$path/$t/$staged"
+      StoreFiles.dataFileCountRecursive(spark, dir) > math.max(2 *
+        StoreFiles.targetFileCount(StoreFiles.dataBytesRecursive(spark, dir)), 2)
+    }
+    val gen =
+      if (!fragmented) staged
+      else {
+        val g = StoreFiles.nextGenName(spark, lg.roots, Nil)
+        rewriteMinhashGen(spark, path, Seq(staged), None, g, 0)
+        val f = StoreFiles.fs(spark, path)
+        minhashTables.foreach(t =>
+          f.delete(new org.apache.hadoop.fs.Path(s"$path/$t/$staged"), true))
+        g
+      }
+    lg.write(spark, GenerationLog.Manifest(gens = Seq(gen)).set(
+      "shingle_k" -> shingleK, "num_hashes" -> numHashes, "bands" -> bands))
   }
 
-  /** Append a new batch to an existing store — pure file additions under
-    * the store's frozen parameters; ids must be new. */
+  /** Append a new batch to an existing store — one generation under the
+    * store's frozen parameters; ids must be new. */
   def appendToMinHashStore(batch: DataFrame, idCol: String, textCol: String,
-      path: String): Unit = {
-    val (k, h, b) = minhashStoreParams(batch.sparkSession, path)
-    minhashStoreWrite(batch, idCol, textCol, path, k, h, b, "append")
-  }
+      path: String): Unit =
+    commitMinhashGen(batch, idCol, textCol, path, None): Unit
 
-  /** Per-tag high-water mark for the streamed append/retract — the store
-    * is pre-manifest (plain dirs), so marks live beside `params.json` in
-    * ONE FILE PER TAG (`marks-<tag>.json`, the pipeline staging dir's
-    * layout; r17 advice). The r16 interim kept a single shared
-    * `marks.json`, whose read-modify-write silently LOST one tag's mark
-    * if an append stream and a takedown stream (each with its own tag,
-    * as the API invites) ever committed concurrently — and a lost mark
-    * re-opens redelivery double-commit once compaction flattens the
-    * generation dirs (the visible-generation self-heal no longer
-    * applies). Per-tag files make each stream's mark single-writer by
-    * construction. Reads fall back to a legacy shared `marks.json`
-    * (frozen — never written again); a per-tag file always wins, which
-    * is monotone-safe because marks only advance. Absent everywhere =
-    * no mark (a never-streamed or legacy store). Shared codec:
-    * [[StoreFiles.readLongMarks]]. */
-  private def minhashMark(spark: SparkSession, path: String,
-      tag: String): Option[Long] =
-    StoreFiles.readLongMarks(spark, s"$path/marks-$tag.json",
-      "graft-minhash-marks").get(tag)
-      .orElse(StoreFiles.readLongMarks(spark, s"$path/marks.json",
-        "graft-minhash-marks").get(tag))
-
-  private def writeMinhashMark(spark: SparkSession, path: String,
-      tag: String, batchId: Long): Unit =
-    StoreFiles.writeLongMarks(spark, s"$path/marks-$tag.json",
-      "graft-minhash-marks", Map(tag -> batchId))
-
-  /** The streaming twin of [[appendToMinHashStore]] (r16 — the missing
-    * member of the BM25/ANN/fingerprint `appendBatch` family, required
-    * for the nightly pipeline's cross-store crash-resume): `(streamTag,
-    * batchId)` makes foreachBatch's at-least-once redeliveries
-    * exactly-once. Returns false (no-op) at or below the tag's committed
-    * high-water mark.
-    *
-    * Mechanics — the store is pre-manifest, so the batch lands as one
-    * `<tag>-b<id>` generation SUBDIR per table (readers are recursive;
-    * flat legacy files serve unchanged), each published by a hidden
-    * stage → rename flip, in fixed order shingles → rows → bucket_counts,
-    * and the mark advances LAST:
-    *
-    *  - a visible generation dir is COMPLETE by construction (the rename
-    *    is the publish), so a resume skips it and fills in only the
-    *    missing tables — on resume, band rows and count deltas re-derive
-    *    DETERMINISTICALLY from the batch's persisted shingles generation,
-    *    never from the caller's frame (which a retry may rebuild
-    *    differently); a fresh attempt derives all three tables from ONE
-    *    pinned (localCheckpoint) shingle frame, which is equivalent —
-    *    the pinned blocks ARE what the shingles write writes, and losing
-    *    them fails loudly into this same resume (r20b);
-    *  - every crash window is correct-at-worst-superset for serves:
-    *    shingles-without-rows are inert (no band rows → no candidates);
-    *    rows-without-counts UNDERCOUNT a bucket, which only disables the
-    *    oversized-bucket skip for it (more candidate work, same verified
-    *    pairs) — and the window closes on resume;
-    *  - a crash after all three flips but before the mark re-runs as a
-    *    pure no-op (all dirs present) and then advances the mark.
-    *
-    * Single-writer contract, and resume-before-compact: a crashed batch
-    * must be redelivered before the next [[compactMinHashStore]] (which
-    * flattens generation dirs — standard crash-RESUME cadence, the same
-    * contract the manifest stores' cooling windows assume). */
+  /** The streaming twin of [[appendToMinHashStore]] (r16 — the member of
+    * the BM25/ANN/fingerprint `appendBatch` family the nightly pipeline's
+    * cross-store crash-resume needs): the batch commits as generation
+    * `<tag>-b<id>` and its id folds into the manifest's `marks` in the
+    * same replace, so foreachBatch's at-least-once redeliveries are
+    * exactly-once — a batch at or below the tag's mark no-ops (returns
+    * false), even after compaction removed its generation. A crash before
+    * the replace leaves unlisted `<tag>-b<id>` orphans that the
+    * redelivery rewrites. Single-writer contract. */
   def appendBatchToMinHashStore(batch: DataFrame, idCol: String,
       textCol: String, path: String, streamTag: String,
       batchId: Long): Boolean = {
     StoreFiles.requireStreamTag(streamTag)
     require(batchId >= 0, s"batchId >= 0, got $batchId")
+    commitMinhashGen(batch, idCol, textCol, path, Some((streamTag, batchId)))
+  }
+
+  private def commitMinhashGen(batch: DataFrame, idCol: String,
+      textCol: String, path: String, stream: GenerationLog.Stream): Boolean = {
     val spark = batch.sparkSession
-    val (shingleK, numHashes, bands) = minhashStoreParams(spark, path)
-    if (minhashMark(spark, path, streamTag).exists(batchId <= _))
-      return false
-    val gen = s"$streamTag-b$batchId"
-    val f = StoreFiles.fs(spark, path)
-    def visible(t: String): Boolean =
-      f.exists(new org.apache.hadoop.fs.Path(s"$path/$t/$gen"))
-    // r20b (r19 verdict #1b, second cut): ONE staging wave for all three
-    // tables instead of two (shingles first, then rows+counts re-derived
-    // from the written generation). The crash contract requires rows and
-    // counts to agree bit-for-bit with the VISIBLE shingles generation
-    // and never to re-trust the caller's frame, so the band-row source
-    // depends on the attempt:
-    //  - FRESH attempt (no shingles generation yet): the shingle frame
-    //    is pinned with an EAGER localCheckpoint — it materializes in
-    //    one job BEFORE the concurrent wave, so all three staging jobs
-    //    read the SAME blocks (a lazy checkpoint would let each
-    //    concurrent write compute the caller's frame itself, and on a
-    //    multi-executor cluster a nondeterministic caller frame could
-    //    publish shingles and rows that disagree). A lost block FAILS
-    //    the job loudly (checkpoint blocks are not recomputable) instead
-    //    of silently recomputing. Deterministic-or-loud; the loud path's
-    //    retry lands in this function's own resume branch.
-    //  - RESUME (shingles generation visible): the source is the
-    //    written generation, exactly as before — only the missing
-    //    tables stage and publish.
-    // Stage dirs are hidden, so the wider overlap stays invisible to
-    // readers (guide §2.6). The PUBLISH renames keep the fixed
-    // shingles → rows → bucket_counts order the crash contract
-    // requires: counts-without-rows would overcount a bucket and
-    // wrongly enable the oversized-bucket skip, rows-without-shingles
-    // would emit candidates whose Jaccard verify finds no shingle set —
-    // the kept order's windows are the documented
-    // correct-at-worst-superset ones, unchanged.
-    val shVisible = visible("shingles")
-    val src =
-      if (shVisible) spark.read.parquet(s"$path/shingles/$gen")
-      else batch.select(q(idCol).as("id"),
-        shingles(q(textCol), shingleK).as("sh")).localCheckpoint(true)
-    try {
-      val rows = src
-        .withColumn("sig", minhashSignature(col("sh"), numHashes))
-        .select(col("id"),
-          explode(bandKeys(col("sig"), bands, numHashes / bands)).as("bk"))
-        .select(col("bk.band").as("band"), col("bk.bucket").as("bucket"),
-          col("id"))
-      // a table whose generation is already visible (crash resume) is
-      // neither staged nor re-published — publishDirOnce's skip, kept.
-      // rows and counts each evaluate the signature+explode from the
-      // pinned/parquet source independently (KB-scale per batch);
-      // determinism holds because the source cannot diverge.
-      val toStage = Seq(
-        "shingles" -> (() => src),
-        "rows" -> (() => rows),
-        "bucket_counts" -> (() => rows.groupBy("band", "bucket")
-          .agg(count(lit(1)).as("n"))))
-        .filterNot { case (t, _) => visible(t) }
-      StoreFiles.runConcurrently(toStage.map { case (t, df) =>
-        () => df().write.mode("overwrite").parquet(s"$path/$t/.stage-$gen")
-      })
-      toStage.foreach { case (t, _) =>
-        require(f.rename(
-          new org.apache.hadoop.fs.Path(s"$path/$t/.stage-$gen"),
-          new org.apache.hadoop.fs.Path(s"$path/$t/$gen")),
-          s"appendBatchToMinHashStore: rename $path/$t/.stage-$gen -> " +
-            s"$path/$t/$gen failed")
-      }
-    } finally if (!shVisible) dropCheckpointBlocks(src)
-    // per-tag file: this stream is its only writer, no other tag's mark
-    // rides in it
-    writeMinhashMark(spark, path, streamTag, batchId)
-    true
+    val lg = minhashLog(path)
+    val m0 = lg.read(spark)
+    if (m0.redelivered(stream)) false
+    else {
+      val gen = lg.nextGen(spark, m0, stream)
+      val (shingleK, numHashes, bands) = minhashParams(m0)
+      writeMinhashGen(batch, idCol, textCol, path, gen, shingleK, numHashes,
+        bands, pin = true)
+      lg.publish(spark, m0, stream, Some(m0.copy(gens = m0.gens :+ gen)))
+    }
   }
 
   /** Free a localCheckpoint's persisted blocks once its last reader is
     * done — the registry-filtered unpersist clusterPairs uses, shared by
-    * the streamed append's pinned shingle frame. Reads the RDD ids from
-    * the frame's OWN plan (never by diffing the context-global persisted
+    * the append's pinned shingle frame. Reads the RDD ids from the
+    * frame's OWN plan (never by diffing the context-global persisted
     * set, which would race concurrent jobs); an unexpected plan shape
     * yields no ids and degrades to the context cleaner. */
   private def dropCheckpointBlocks(df: DataFrame): Unit = {
@@ -976,41 +888,36 @@ object Dedup {
     }
   }
 
-  /** The live retracted ids of a MinHash store as a one-column `id`
+  /** The live retracted ids of a manifest snapshot as a one-column `id`
     * frame, or None when there are none. Broadcast-small by contract
     * (enforced at [[retractFromMinHashStore]]). */
-  private def minhashTombstones(spark: SparkSession,
-      path: String): Option[DataFrame] = {
-    val p = new org.apache.hadoop.fs.Path(s"$path/tombs")
-    if (!StoreFiles.fs(spark, path).exists(p)) None
-    else if (StoreFiles.dataFileCountRecursive(spark, s"$path/tombs") == 0) None
-    // recursiveFileLookup: retraction batches land as one generation DIR
-    // each (r15 — the shared StoreFiles.commitTombstones layout); the
-    // option also reads any pre-r15 flat files unchanged
-    else Some(spark.read.option("recursiveFileLookup", "true")
-      .parquet(s"$path/tombs").select("id").distinct())
-  }
+  private def minhashTombstones(spark: SparkSession, path: String,
+      m: GenerationLog.Manifest): Option[DataFrame] =
+    if (m.tombs.isEmpty) None
+    else Some(readMinhashTable(spark, path, "tombs", m.tombs)
+      .select("id").distinct())
 
   /** Number of live retracted ids (0 after [[compactMinHashStore]]
     * retires them) — the audit counter for retraction verification. */
   def minhashRetractionCount(spark: SparkSession, path: String): Long =
-    minhashTombstones(spark, path).fold(0L)(_.count())
+    minhashTombstones(spark, path, minhashLog(path).read(spark))
+      .fold(0L)(_.count())
 
   /** Retract documents from a MinHash store by id — the takedown path
     * for NEAR-dup dedup (content removed from the training corpus must
-    * stop suppressing future crawls of similar text). Ids land in an
-    * append-mode `tombs/` side (the store's pre-manifest idiom: plain
-    * dirs + swap-based compaction), and every serve anti-joins the
-    * stored band rows against them, so retracted documents stop
-    * generating candidate pairs immediately — with zero store bytes
-    * rewritten. [[compactMinHashStore]] is the physical-erasure point:
-    * rows/shingles scrub, the bucket-count snapshot recomputes from the
-    * SCRUBBED rows, and the tombstones clear. Between retraction and
-    * compaction the serve subtracts the retracted rows' bucket
-    * membership from the stored count deltas before applying the
-    * oversized-bucket cap (r15 — one extra tombstone-bounded semi-join
-    * that exists only inside that window), so the cap decision matches
-    * the live corpus exactly even when a bucket straddles it. A retraction masks its id store-wide until a
+    * stop suppressing future crawls of similar text). The ids commit as
+    * one tombstone generation by the same manifest replace as appends,
+    * and every serve anti-joins the stored band rows against them, so
+    * retracted documents stop generating candidate pairs immediately —
+    * with zero store bytes rewritten. [[compactMinHashStore]] is the
+    * physical-erasure point: rows/shingles scrub, the bucket-count
+    * snapshot recomputes from the SCRUBBED rows, and the tombstones
+    * retire. Between retraction and compaction the serve subtracts the
+    * retracted rows' bucket membership from the stored count deltas
+    * before applying the oversized-bucket cap (r15 — one extra
+    * tombstone-bounded semi-join that exists only inside that window), so
+    * the cap decision matches the live corpus exactly even when a bucket
+    * straddles it. A retraction masks its id store-wide until a
     * compaction retires it — retract→re-add must compact in between.
     * Unknown ids are fine; null ids refuse; the broadcast-small contract
     * is enforced via `graft.minhash.maxTombstones` (default 10M).
@@ -1020,49 +927,17 @@ object Dedup {
     commitMinhashRetraction(ids, idCol, path, None)
 
   /** The streaming twin of [[retractFromMinHashStore]] (r16 — the
-    * takedown-side sibling of [[appendBatchToMinHashStore]], completing
-    * the exactly-once family for crash-resumable takedown compositions):
-    * `(streamTag, batchId)` names the tombstone generation `<tag>-b<id>`
-    * and the store's per-tag mark (its own `marks-<tag>.json` — a tag is
-    * 1:1 with one stream's checkpoint, so an append stream and a
-    * takedown stream with distinct tags may commit concurrently without
-    * racing each other's marks; r17 advice) makes redeliveries no-ops
-    * (returns 0). The mark advances AFTER the
-    * tombstone flip; a crash between them leaves the batch's generation
-    * VISIBLE (already masking — the rename is the publish on this
-    * directory-listed store) with a stale mark, and the resume detects
-    * the visible generation and only advances the mark — it must NOT
-    * re-run the commit, whose reclaim (delete-then-rename) would
-    * transiently UNMASK the committed tombstones for concurrent
-    * lock-free serves (r16 second-pass review; the manifest stores have
-    * no such window because their readers never list directories). */
+    * takedown-side sibling of [[appendBatchToMinHashStore]]): `(streamTag,
+    * batchId)` names the tombstone generation `<tag>-b<id>` and folds
+    * into the manifest's marks in the same replace, so redeliveries are
+    * no-ops (return 0); an empty batch still advances its mark. Marks
+    * share the appends' per-tag map — a tag is 1:1 with one stream's
+    * checkpoint, so a takedown stream uses its own tag. */
   def retractBatchFromMinHashStore(ids: DataFrame, idCol: String,
       path: String, streamTag: String, batchId: Long): Long = {
     StoreFiles.requireStreamTag(streamTag)
     require(batchId >= 0, s"batchId >= 0, got $batchId")
-    val spark = ids.sparkSession
-    minhashStoreParams(spark, path): Unit // sentinel: refuse non-store dirs
-    if (minhashMark(spark, path, streamTag).exists(batchId <= _)) 0L
-    else {
-      val gen = s"$streamTag-b$batchId"
-      val genRows =
-        StoreFiles.parquetRowsWritten(spark, s"$path/tombs/$gen")
-      if (genRows >= 0L) {
-        // crash-before-mark window: the flip completed (a visible gen is
-        // complete by construction), so the batch is already masking —
-        // just advance the mark and report the committed rows
-        writeMinhashMark(spark, path, streamTag, batchId)
-        genRows
-      } else {
-        // the mark advances AFTER the commit returns (flip-then-mark
-        // ordering) — an empty batch commits no generation but still
-        // advances, so its redelivery stops retrying
-        val n = commitMinhashRetraction(ids, idCol, path,
-          Some((streamTag, batchId)))
-        writeMinhashMark(spark, path, streamTag, batchId)
-        n
-      }
-    }
+    commitMinhashRetraction(ids, idCol, path, Some((streamTag, batchId)))
   }
 
   /** foreachBatch writer for a takedown stream — each micro-batch of ids
@@ -1078,45 +953,36 @@ object Dedup {
   }
 
   private def commitMinhashRetraction(ids: DataFrame, idCol: String,
-      path: String, stream: Option[(String, Long)]): Long = {
-    val spark = ids.sparkSession
-    minhashStoreParams(spark, path): Unit // sentinel: refuse non-store dirs
-    // this store is pre-manifest (plain dirs + swap compaction), so
-    // commitTombstones' stage→rename flip IS the publish — readers list
-    // tombs/ directly — and publish() is a no-op (the streamed caller
-    // advances its mark AFTER this returns, from its entry read). The
-    // live mass for the broadcast-small cap is everything a serve
-    // actually reads: one recursive footer count over tombs/ covers both
-    // the r15 generation dirs AND any pre-r15 flat append files (r15
-    // review — counting only the dirs let a legacy flat-file mass bypass
-    // the cap). A same-named visible generation never reaches here — the
-    // streamed caller short-circuits on it (see above), so the cap math
-    // needs no orphan subtraction. Shared mechanics otherwise — see
-    // StoreFiles.commitTombstones (r15, verdict #5).
-    val liveRows = math.max(0L,
-      StoreFiles.parquetRowsWritten(spark, s"$path/tombs"))
-    StoreFiles.commitTombstones(ids.select(q(idCol).as("id")), "id",
-      s"$path/tombs", Nil, GenerationLog.streamGen(stream),
-      "graft.minhash.maxTombstones",
-      "retractFromMinHashStore", "compactMinHashStore",
-      extraLiveRows = liveRows)(_ => ())
-  }
+      path: String, stream: GenerationLog.Stream): Long =
+    minhashLog(path).commitTombstones(ids.select(q(idCol).as("id")), "id",
+      stream, "graft.minhash.maxTombstones", "retractFromMinHashStore",
+      "compactMinHashStore")
 
   /** [[minhashPairsAgainst]] served from a persisted store: corpus text is
     * never read — band rows join the incoming batch's band keys, the
     * oversized-bucket skip reads only the summed count deltas, and the
     * exact-Jaccard verify joins the stored shingle sets. Row-identical to
     * the direct path (spec-asserted). Retracted ids
-    * ([[retractFromMinHashStore]]) never generate candidates. */
+    * ([[retractFromMinHashStore]]) never generate candidates. Parameters,
+    * data generations and tombstones come from ONE manifest snapshot. */
   def minhashPairsAgainstStore(incoming: DataFrame, idCol: String,
       textCol: String, path: String, threshold: Double = 0.8,
       maxBucketSize: Long = 10000L): DataFrame = {
     val spark = incoming.sparkSession
-    val (shingleK, numHashes, bands) = minhashStoreParams(spark, path)
+    val m = minhashLog(path).read(spark)
+    val (shingleK, numHashes, bands) = minhashParams(m)
+    def table(t: String): DataFrame = readMinhashTable(spark, path, t, m.gens)
     val cap = math.toIntExact(math.min(maxBucketSize, (Int.MaxValue - 2).toLong))
-    val banded =
-      bandedSide(incoming, idCol, textCol, "id_new", shingleK, numHashes, bands)
-        .select(col("id_new"), col("band"), col("bucket"))
+    // the incoming frame is shingled ONCE: an eager localCheckpoint pins
+    // (id_new, sh) before the plans below read it — the probed-bucket
+    // aggregations, the candidate join and the verify would each
+    // re-evaluate the caller's frame otherwise, and a nondeterministic
+    // one could then probe buckets the candidate join never sees, which
+    // breaks the serve ≡ direct identity at the cap
+    val shIn = incoming.select(q(idCol).as("id_new"),
+      shingles(q(textCol), shingleK).as("sh")).localCheckpoint(true)
+    val banded = bandRows(shIn, "id_new", numHashes, bands)
+      .select(col("id_new"), col("band"), col("bucket"))
     // r20 (guide §3.2 / §2.3): only buckets the BATCH probes can ever
     // generate candidates — a bucket absent from `probed` cannot match
     // the (band, bucket) equi-join below, whatever its cap status — so
@@ -1135,8 +1001,8 @@ object Dedup {
     // boilerplate keys) — broadcast those and anti-join; the under-cap set
     // is ~bands·|corpus| for a mostly-unique corpus and must never be a
     // broadcast side
-    val tomb = minhashTombstones(spark, path)
-    val counts = readMinhashTable(spark, s"$path/bucket_counts")
+    val tomb = minhashTombstones(spark, path, m)
+    val counts = table("bucket_counts")
       .join(probed, Seq("band", "bucket"), "left_semi")
       .groupBy("band", "bucket").agg(sum("n").as("n"))
     val overCap = tomb match {
@@ -1151,7 +1017,7 @@ object Dedup {
         // the direct path over the live corpus exactly (r14 ADVICE — the
         // serve ≡ direct row-identity the spec asserts holds even when a
         // bucket straddles the cap)
-        val retracted = readMinhashTable(spark, s"$path/rows")
+        val retracted = table("rows")
           .join(probed, Seq("band", "bucket"), "left_semi")
           .join(broadcast(t), Seq("id"), "left_semi")
           .groupBy("band", "bucket").agg(count(lit(1)).as("rn"))
@@ -1159,7 +1025,7 @@ object Dedup {
           .filter(col("n") - coalesce(col("rn"), lit(0L)) > cap)
           .select("band", "bucket")
     }
-    val corpusRows0 = readMinhashTable(spark, s"$path/rows")
+    val corpusRows0 = table("rows")
       .join(broadcast(overCap), Seq("band", "bucket"), "left_anti")
     val corpusRows = tomb.fold(corpusRows0) { t =>
       corpusRows0.join(broadcast(t), Seq("id"), "left_anti") }
@@ -1167,100 +1033,49 @@ object Dedup {
         .join(corpusRows, Seq("band", "bucket"))
         .select(col("id_new"), col("id").as("id_corpus"))
         .dropDuplicates("id_new", "id_corpus")
-    val shNew = incoming
-      .select(q(idCol).as("id_new"), shingles(q(textCol), shingleK).as("sh_new"))
+    val shNew = shIn.select(col("id_new"), col("sh").as("sh_new"))
       .join(cand.select("id_new").distinct(), Seq("id_new"), "left_semi")
-    val shCorpus = readMinhashTable(spark, s"$path/shingles")
+    val shCorpus = table("shingles")
       .select(col("id").as("id_corpus"), col("sh").as("sh_corpus"))
       .join(cand.select("id_corpus").distinct(), Seq("id_corpus"), "left_semi")
     crossJaccardVerify(cand, shNew, shCorpus, threshold)
   }
 
-  /** Compact a MinHash store after N appends: the per-append
-    * `bucket_counts` COUNT DELTAS collapse into one summed snapshot
-    * (distinct-bucket-sized), and `rows/` / `shingles/` rewrite into
-    * size-targeted files (default ~128 MB). Served results are UNCHANGED —
-    * the serve already sums the deltas and unions the row files, so
-    * compaction only removes the per-file LIST/GET overhead that
-    * accumulates with crawl appends (the object-store small-files killer).
-    * Hash-identity vs the uncompacted store is gate-asserted.
-    *
-    * Crash safety: the three directory swaps are independent and each
-    * replaces content with an EQUIVALENT re-aggregation, so a crash
-    * BETWEEN swaps leaves a mixed — but still correct — store; a crash
-    * INSIDE a swap leaves that one directory missing (serves fail loudly,
-    * never wrong) and the healDir pass at the top of the next compact run
-    * restores it. Re-running compact always completes the job. */
+  /** Compact a MinHash store after N appends: [[rewriteMinhashGen]] writes
+    * the live generations as ONE new generation and one manifest replace
+    * publishes it ([[GenerationLog.compact]]). Served results are
+    * UNCHANGED — the serve already sums the deltas and unions the row
+    * files, so compaction only removes the per-file LIST/GET overhead
+    * that accumulates with crawl appends (the object-store small-files
+    * killer); hash-identity vs the uncompacted store is gate-asserted.
+    * Live tombstones retire here. Superseded generations cool for
+    * `graft.store.gcGraceMs`, so a serve planned against the previous
+    * manifest keeps its files; a crash before the replace leaves orphans
+    * the next compaction sweeps. Stream marks survive. */
   def compactMinHashStore(spark: SparkSession, path: String,
       targetFiles: Int = 0): Unit = {
-    minhashStoreParams(spark, path) // sentinel: refuse non-store directories
-    Seq("bucket_counts", "rows", "shingles")
-      .foreach(d => StoreFiles.healDir(spark, s"$path/$d"))
-    def target(dir: String): Int =
-      if (targetFiles > 0) targetFiles
-      else StoreFiles.targetFileCount(StoreFiles.dataBytesRecursive(spark, dir))
-    // retraction healing (r14): retracted ids drop from the rewritten
-    // rows/shingles, and the count snapshot recomputes from the SCRUBBED
-    // rows instead of the delta sum — compaction is the physical-erasure
-    // point. Crash ordering stays correct at every window: the tombs dir
-    // clears LAST, so a crash mid-compaction leaves the serve-side
-    // anti-join masking whatever a swapped dir still holds, and a re-run
-    // completes the job.
-    val tomb = minhashTombstones(spark, path)
-    def scrub(df: DataFrame): DataFrame =
-      tomb.fold(df)(t => df.join(broadcast(t), Seq("id"), "left_anti"))
-    // 1. count deltas -> one summed snapshot (semantically what every
-    //    serve computes on the fly). repartition, NOT coalesce: coalesce
-    //    would fold the sum's reduce side down to the output file count
-    //    (1 for most stores) — the extra shuffle moves only the summed
-    //    output, which is distinct-bucket-sized
-    val bcDir = s"$path/bucket_counts"
-    val counts = tomb match {
-      case None => readMinhashTable(spark, bcDir)
-        .groupBy("band", "bucket").agg(sum("n").as("n"))
-      case Some(_) => scrub(readMinhashTable(spark, s"$path/rows"))
-        .groupBy("band", "bucket").agg(count(lit(1)).as("n"))
-    }
-    counts
-      .repartition(target(bcDir)).write.mode("overwrite")
-      .parquet(bcDir + ".compacting")
-    StoreFiles.swapDir(spark, bcDir + ".compacting", bcDir)
-    // 2-3. band rows and shingles: pure file-count rewrites. coalesce is
-    //    right here — no aggregation to starve, and the task count
-    //    (bytes/128 MB) scales with store size, so big stores keep their
-    //    read parallelism. r20: the two rewrite+swap chains touch
-    //    DISJOINT directories (each reads and swaps only its own), so
-    //    they overlap (guide §2.6); the counts snapshot above must stay
-    //    sequential — in the retraction branch it reads rows/, which the
-    //    rows swap would delete mid-scan. Crash windows are unchanged:
-    //    the swaps were already order-independent ("a crash BETWEEN
-    //    swaps leaves a mixed but correct store"), any chain that dies
-    //    inside its swap leaves that one dir missing for healDir, and
-    //    tombs still clear LAST.
-    StoreFiles.runConcurrently(Seq(s"$path/rows", s"$path/shingles")
-      .map(dir => () => {
-        scrub(readMinhashTable(spark, dir))
-          .coalesce(target(dir)).write.mode("overwrite")
-          .parquet(dir + ".compacting")
-        StoreFiles.swapDir(spark, dir + ".compacting", dir)
-      }))
-    // retractions are now physical — retire the tombstones (last, so any
-    // crash above leaves them still masking)
-    if (tomb.nonEmpty)
-      StoreFiles.fs(spark, path)
-        .delete(new org.apache.hadoop.fs.Path(s"$path/tombs"), true): Unit
+    val lg = minhashLog(path)
+    val m = lg.read(spark) // refuses a non-store directory before any write
+    val gen = lg.nextGen(spark, m, None)
+    rewriteMinhashGen(spark, path, m.gens, minhashTombstones(spark, path, m),
+      gen, targetFiles)
+    lg.compact(spark, m, Some(gen))(identity)
   }
 
-  /** Live visible data files across the store's tables (tombstones
-    * included — every serve lists and anti-joins them), the quantity the
-    * compaction cadence bounds. */
-  def minhashStoreFileCount(spark: SparkSession, path: String): Int =
-    Seq("shingles", "rows", "bucket_counts", "tombs")
-      .map(t => StoreFiles.dataFileCountRecursive(spark, s"$path/$t")).sum
+  /** Data files of the generations the manifest lists across the store's
+    * tables (tombstones included — every serve reads them), the quantity
+    * the compaction cadence bounds; crash orphans and cooling grace
+    * copies are not counted. */
+  def minhashStoreFileCount(spark: SparkSession, path: String): Int = {
+    val m = minhashLog(path).read(spark)
+    (minhashTables.flatMap(t => m.gens.map(g => s"$path/$t/$g")) ++
+      m.tombs.map(g => s"$path/tombs/$g"))
+      .map(StoreFiles.committedGenFiles(spark, _)).sum
+  }
 
   /** Threshold-driven compaction cadence for crawl loops (r16, r15-verdict
     * #2 — the long-soak contract): call after every append/takedown;
-    * compacts only when the store's visible file count exceeds `maxFiles`,
+    * compacts only when the store's live file count exceeds `maxFiles`,
     * so hundreds of interleaved append/takedown cycles keep the file
     * count sawtoothing under the threshold (and serve latency flat)
     * instead of degrading into the object-store small-files regime.

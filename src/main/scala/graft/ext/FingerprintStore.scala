@@ -52,7 +52,7 @@ object FingerprintStore {
     * `tombs` are retraction generations — see [[retract]]. */
   private def genLog(path: String) = GenerationLog(s"$path/manifest.json",
     "graft-fingerprint-store", 2, s"fingerprint store at $path",
-    Seq(fpsRoot(path)), Some(s"$path/tombs"), "graft.fpstore.gcGraceMs")
+    Seq(fpsRoot(path)), Some(s"$path/tombs"))
 
   /** The committed fingerprints: the union of the committed generations
     * (retractions NOT yet applied — see [[liveFps]]). */
@@ -394,7 +394,7 @@ object FingerprintStore {
     * old-geometry manifest; the next append's `mergeInPlace` then fails
     * LOUDLY rather than corrupting — re-run compact to heal). Publishes
     * by the same atomic manifest flip as appends; superseded generations
-    * cool for `graft.fpstore.gcGraceMs` (default 15 min) before the sweep
+    * cool for `graft.store.gcGraceMs` (default 15 min) before the sweep
     * so lock-free serves survive back-to-back compactions; crash orphans
     * (never in any manifest) delete immediately. Stream marks survive. */
   def compact(spark: SparkSession, path: String, targetFiles: Int = 0,

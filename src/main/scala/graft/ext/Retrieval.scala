@@ -179,7 +179,7 @@ object Retrieval {
   //     store is unreadable.
   //   - GC is DEFERRED by the cooling ledger: compact() deletes crash
   //     orphans immediately (never visible to any reader) but keeps the
-  //     generations it supersedes on disk for `graft.bm25.gcGraceMs`, so
+  //     generations it supersedes on disk for `graft.store.gcGraceMs`, so
   //     lock-free serves planned against an older manifest keep their
   //     files.
   //   - single-writer contract (like every store in the family): appends/
@@ -192,8 +192,7 @@ object Retrieval {
     * — see [[deleteDocs]]. */
   private def genLog(path: String) = GenerationLog(s"$path/manifest.json",
     "graft-bm25-index", 2, s"BM25 index at $path",
-    sides.map(side => s"$path/$side"), Some(s"$path/tombs"),
-    "graft.bm25.gcGraceMs")
+    sides.map(side => s"$path/$side"), Some(s"$path/tombs"))
 
   private def bucketOf(token: Column, nBuckets: Int): Column =
     pmod(xxhash64(token), lit(nBuckets.toLong)).cast("int")
@@ -214,24 +213,9 @@ object Retrieval {
     * orphans and the one-compaction grace window of superseded gens). */
   def liveFileCount(spark: SparkSession, path: String): Long = {
     val m = genLog(path).read(spark)
-    (m.gens.map(g => requireGenFiles(spark, path, "dlen", g)) ++
-      m.strs("pgens").flatMap(g => Seq(
-        requireGenFiles(spark, path, "postings", g),
-        requireGenFiles(spark, path, "dfd", g)))).sum
-  }
-
-  /** File count of a manifest-committed generation, refusing loudly when
-    * the directory is missing on disk (r18 review: missing-path counted
-    * as 0, so footprint stats silently SHRANK on external damage and the
-    * compaction cadence under-triggered — the tombstone_rows stat in the
-    * same map already refuses for the identical damage). */
-  private def requireGenFiles(spark: SparkSession, path: String,
-      side: String, g: String): Long = {
-    val p = s"$path/$side/$g"
-    require(StoreFiles.fs(spark, path).exists(new Path(p)),
-      s"manifest-committed generation missing on disk: $p — the store " +
-        "was externally damaged; restore the generation or rebuild")
-    StoreFiles.dataFileCountRecursive(spark, p).toLong
+    (m.gens.map(g => s"$path/dlen/$g") ++ m.strs("pgens").flatMap(g =>
+      Seq(s"$path/postings/$g", s"$path/dfd/$g")))
+      .map(StoreFiles.committedGenFiles(spark, _).toLong).sum
   }
 
   /** Write one generation (the unit of both build and append): postings +
@@ -596,7 +580,7 @@ object Retrieval {
     if (emptied) f.delete(new Path(s"$path/dlen/$gen"), true)
     // cooling ledger (r11, closes the back-to-back-compaction race): the
     // generations THIS compaction supersedes — and the retired tombstone
-    // generations — cool for `graft.bm25.gcGraceMs` whatever the number
+    // generations — cool for `graft.store.gcGraceMs` whatever the number
     // of compactions in between (compactIndexIfNeeded can legally fire
     // twice in quick succession). Grace 0 restores the plain
     // one-compaction deferral.

@@ -26,7 +26,7 @@ import org.apache.spark.sql.functions._
   * generation dir (invisible), then ONE manifest flip publishes it —
   * crash orphans are never served and are GC'd by the next compact; a
   * compaction publishes by the same flip with superseded generations
-  * cooling for `graft.sketchstore.gcGraceMs` (default 15 min), so
+  * cooling for `graft.store.gcGraceMs` (default 15 min), so
   * lock-free serves survive back-to-back compactions. Streaming ingest
   * gets the same per-tag marks as the other stores (exactly-once under
   * foreachBatch re-delivery).
@@ -45,7 +45,7 @@ object SketchStore {
 
   private def genLog(path: String) = GenerationLog(s"$path/manifest.json",
     "graft-sketch-store", 2, s"sketch store at $path", Seq(rowsRoot(path)),
-    None, "graft.sketchstore.gcGraceMs")
+    None)
 
   /** Per-key distinct sketches over `valueCol`: one row per key group —
     * (keys…, n_rows, sketch). `lgK` trades size (2^lgK bytes-ish) for
@@ -299,7 +299,7 @@ object SketchStore {
     * Key columns are discovered from the store schema (everything except
     * n_rows/sketch/batch). Publishes by the same atomic manifest flip as
     * appends; superseded generations cool for
-    * `graft.sketchstore.gcGraceMs` before the sweep; crash orphans
+    * `graft.store.gcGraceMs` before the sweep; crash orphans
     * delete immediately. Stream marks survive. */
   def compact(spark: SparkSession, path: String): Unit = {
     val lg = genLog(path)

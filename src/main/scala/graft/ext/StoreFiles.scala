@@ -3,11 +3,10 @@ package graft.ext
 import org.apache.hadoop.fs.{FileSystem, Path}
 import org.apache.spark.sql.SparkSession
 
-/** Filesystem plumbing shared by the persisted stores: the MinHash store
-  * in [[Dedup]] and the five manifest stores that commit through
-  * [[GenerationLog]] ([[FingerprintStore]], [[SketchStore]],
-  * [[ValidationLedger]], the BM25 index in [[Retrieval]] and the
-  * [[AnnStore]] codes).
+/** Filesystem plumbing shared by the six persisted stores, which all
+  * commit through [[GenerationLog]]: the MinHash store in [[Dedup]],
+  * [[FingerprintStore]], [[SketchStore]], [[ValidationLedger]], the BM25
+  * index in [[Retrieval]] and the [[AnnStore]] codes.
   *
   * Why compaction exists at all: every store is append-only by contract —
   * each crawl batch ADDS parquet files and never rewrites history. After
@@ -20,9 +19,8 @@ import org.apache.spark.sql.SparkSession
   * the uncompacted store.
   *
   * All paths go through the Hadoop FileSystem API, so the same code runs
-  * on local disk, HDFS, or s3a/gcs connectors. Visibility flips are a
-  * single atomic manifest replace for the manifest stores and
-  * rename-based for the MinHash store's generation directories. */
+  * on local disk, HDFS, or s3a/gcs connectors. Every visibility flip is
+  * a single atomic manifest replace. */
 object StoreFiles {
 
   def fs(spark: SparkSession, dir: String): FileSystem =
@@ -203,22 +201,14 @@ object StoreFiles {
     *      count toward the cap and the returned n — a caller asserting
     *      n > 0 would see a false success);
     *   3. the broadcast-small cap (`capConfKey`, default 10M) is enforced
-    *      against the LIVE committed rows (plus `extraLiveRows` — a store
-    *      whose live tombstone mass is not generation-shaped, e.g. the
-    *      MinHash store's pre-r15 flat files, passes it explicitly; r15
-    *      review: those rows are read by every serve, so they must count
-    *      toward the broadcast-small contract); each committed generation
-    *      is asserted present on disk before counting — a lost generation
+    *      against the LIVE committed rows; each committed generation is
+    *      asserted present on disk before counting — a lost generation
     *      refuses loudly instead of silently skewing the cap (r14 ADVICE);
     *   4. the batch is written to a HIDDEN staging dir and renamed to its
-    *      generation name only after every check passes (r15 review: for
-    *      a manifest-less store — the MinHash tombs/ side, where readers
-    *      list the directory — the write IS the publish, so a crash
-    *      between a direct write and a failed check's cleanup would have
-    *      committed a violating batch forever; manifest stores get the
-    *      same flip for uniformity, their visibility still waits for the
-    *      manifest). Stale `.stage-*` orphans from crashed attempts are
-    *      swept first (single-writer contract);
+    *      generation name only after every check passes, so a refused
+    *      batch never lands at a generation name (visibility still waits
+    *      for the caller's manifest). Stale `.stage-*` orphans from
+    *      crashed attempts are swept first (single-writer contract);
     *   5. `publish(Some(gen))` hands the caller the generation to commit
     *      in its own manifest flip; `publish(None)` signals an empty batch
     *      (nothing written — the caller may still advance a stream mark).
@@ -228,7 +218,7 @@ object StoreFiles {
   def commitTombstones(ids: org.apache.spark.sql.DataFrame, idName: String,
       tombsRoot: String, committedGens: Seq[String],
       streamGen: Option[String], capConfKey: String, what: String,
-      compactHint: String, extraLiveRows: Long = 0L)(
+      compactHint: String)(
       publish: Option[String] => Unit): Long = {
     val spark = ids.sparkSession
     val gen = streamGen.getOrElse(
@@ -243,7 +233,7 @@ object StoreFiles {
     }
     // repartition(1), NOT coalesce(1): coalesce would collapse the
     // distinct's reduce side into that single task (the trap
-    // compactMinHashStore documents); the extra shuffle moves only the
+    // the MinHash compaction documents); the extra shuffle moves only the
     // distinct OUTPUT — cap-bounded, so one write task is fine (r16)
     ids.distinct().repartition(1).write.mode("overwrite").parquet(stage)
     val (n, nulls) = parquetRowsAndNulls(spark, stage, idName)
@@ -265,8 +255,7 @@ object StoreFiles {
           "nothing (serves anti-join with non-null-safe equality) but " +
           "would count toward the cap and the returned n; filter it out")
       }
-      val live = extraLiveRows +
-        committedTombstoneRows(spark, tombsRoot, committedGens, what)
+      val live = committedTombstoneRows(spark, tombsRoot, committedGens, what)
       val cap = spark.conf.getOption(capConfKey).map(_.toLong)
         .getOrElse(10000000L)
       if (live + n > cap) {
@@ -287,11 +276,11 @@ object StoreFiles {
     }
   }
 
-  /** The small marks files of the stores without a manifest
-    * (`{"format":"…","marks":{tag:long}}` — the MinHash store and the
-    * pipeline staging dir), on the [[GenerationLog]] JSON codec. Absent
-    * file = no marks. The format tag is asserted so a foreign JSON file
-    * refuses loudly instead of parsing as empty. */
+  /** The small marks files of the pipeline staging dir, which is not a
+    * store and has no manifest (`{"format":"…","marks":{tag:long}}`), on
+    * the [[GenerationLog]] JSON codec. Absent file = no marks. The format
+    * tag is asserted so a foreign JSON file refuses loudly instead of
+    * parsing as empty. */
   def readLongMarks(spark: SparkSession, path: String,
       format: String): Map[String, Long] = {
     if (!fs(spark, path).exists(new Path(path))) Map.empty
@@ -308,12 +297,11 @@ object StoreFiles {
     writeUtf8Atomic(spark, path,
       GenerationLog.encode(Seq("format" -> format, "marks" -> marks)))
 
-  /** Publish a generation directory exactly once (r16 — the one
-    * stage→rename implementation for the pre-manifest publish shape,
-    * shared by the MinHash streamed append's per-table generations and
-    * the pipeline staging step): if `genDir` is already VISIBLE, a prior
-    * attempt completed it — the rename is the publish, so a visible dir
-    * is complete by construction — and this is a no-op (returns false);
+  /** Publish a generation directory exactly once (r16 — the stage→rename
+    * publish of the pipeline staging step, which has no manifest): if
+    * `genDir` is already VISIBLE, a prior attempt completed it — the
+    * rename is the publish, so a visible dir is complete by construction
+    * — and this is a no-op (returns false);
     * otherwise `write` runs against the hidden stage path (its
     * mode("overwrite") semantics reclaim a crashed attempt's orphan) and
     * the rename flips it visible. Single-writer contract. */
@@ -395,41 +383,15 @@ object StoreFiles {
       .rename(tmp, dst, org.apache.hadoop.fs.Options.Rename.OVERWRITE)
   }
 
-  /** Heal a directory left mid-swap by a crashed [[swapDir]]: if `live`
-    * is missing but `live.old` exists, the crash hit the window between
-    * the two renames — restore the old (pre-compaction, still correct)
-    * data. The MinHash store's compaction calls this FIRST, so "re-run
-    * compact to heal" genuinely works; idempotent no-op otherwise. */
-  def healDir(spark: SparkSession, liveDir: String): Unit = {
-    val f = fs(spark, liveDir)
-    val live = new Path(liveDir)
-    val old = new Path(liveDir + ".old")
-    if (!f.exists(live) && f.exists(old))
-      require(f.rename(old, live), s"heal: rename $old -> $live failed")
-  }
-
-  /** Replace `liveDir` with `tmpDir` via rename: live → live.old,
-    * tmp → live, delete live.old. Crash windows: before the first rename
-    * the store is untouched; between the renames there is NO live dir —
-    * serves fail loudly (never silently wrong) and the next `compact()`'s
-    * [[healDir]] restores the old data; after the second rename the
-    * compacted data is live. A FAILED (false-returning) second rename
-    * rolls back in-line. */
-  def swapDir(spark: SparkSession, tmpDir: String, liveDir: String): Unit = {
-    val f = fs(spark, liveDir)
-    val live = new Path(liveDir)
-    val tmp = new Path(tmpDir)
-    val old = new Path(liveDir + ".old")
-    if (f.exists(old)) f.delete(old, true)
-    require(f.rename(live, old), s"compact: rename $live -> $old failed")
-    // if the second rename FAILS (returns false, e.g. permissions/races —
-    // distinct from a process crash), roll the old dir back so the store
-    // never sits without a live directory because of a reported error
-    if (!f.rename(tmp, live)) {
-      f.rename(old, live)
-      sys.error(s"compact: rename $tmp -> $live failed (rolled back)")
-    }
-    f.delete(old, true)
+  /** Data files of a manifest-committed generation directory, refusing
+    * loudly when it is missing on disk (r18 review: missing-path counted
+    * as 0, so footprint stats silently SHRANK on external damage and the
+    * compaction cadences under-triggered). */
+  def committedGenFiles(spark: SparkSession, genDir: String): Int = {
+    require(fs(spark, genDir).exists(new Path(genDir)),
+      s"manifest-committed generation missing on disk: $genDir — the " +
+        "store was externally damaged; restore the generation or rebuild")
+    dataFileCountRecursive(spark, genDir)
   }
 
   /** Delete every generation directory under `root` that is not in
@@ -496,9 +458,10 @@ object StoreFiles {
   }
 }
 
-/** The one commit protocol of the five manifest stores — the
-  * [[FingerprintStore]], [[SketchStore]], [[ValidationLedger]], the BM25
-  * index in [[Retrieval]] and the [[AnnStore]] codes — in the shape of
+/** The one commit protocol of the six persisted stores — the MinHash
+  * store in [[Dedup]], the [[FingerprintStore]], [[SketchStore]],
+  * [[ValidationLedger]], the BM25 index in [[Retrieval]] and the
+  * [[AnnStore]] codes — in the shape of
   * Delta Lake's single log of table metadata (Armbrust et al., VLDB 2020).
   *
   * A store's state is ONE small JSON manifest, `file`:
@@ -522,7 +485,7 @@ object StoreFiles {
   *   - GC: a compaction publishes its one new generation and moves every
   *     generation it supersedes — data and tombstones — into the cooling
   *     ledgers; the sweep deletes every directory that is neither live
-  *     nor younger than the store's `*.gcGraceMs` (default 15 min), so
+  *     nor younger than `graft.store.gcGraceMs` (default 15 min), so
   *     lock-free serves planned against an older manifest keep their files
   *     across any number of back-to-back compactions.
   *
@@ -530,7 +493,7 @@ object StoreFiles {
   * store versions are not supported. Single-writer contract per store. */
 private[ext] final case class GenerationLog(file: String, format: String,
     version: Int, what: String, roots: Seq[String],
-    tombsRoot: Option[String], graceConfKey: String) {
+    tombsRoot: Option[String]) {
   import GenerationLog._
 
   def exists(spark: SparkSession): Boolean =
@@ -623,7 +586,7 @@ private[ext] final case class GenerationLog(file: String, format: String,
     * marks survive. */
   def compact(spark: SparkSession, m0: Manifest, newGen: Option[String])(
       edit: Manifest => Manifest): Unit = {
-    val graceMs = spark.conf.getOption(graceConfKey).map(_.toLong)
+    val graceMs = spark.conf.getOption("graft.store.gcGraceMs").map(_.toLong)
       .getOrElse(15L * 60 * 1000)
     val now = System.currentTimeMillis()
     def cool(ledger: Map[String, Long], retired: Seq[String]) =

@@ -63,7 +63,7 @@ object ValidationLedger {
     * pre-r14 manifests (reads as Nil; adopted at the next commit). */
   private def genLog(path: String) = GenerationLog(s"$path/manifest.json",
     "graft-validation-ledger", 1, s"validation ledger at $path",
-    Seq(rowsRoot(path)), None, "graft.ledger.gcGraceMs")
+    Seq(rowsRoot(path)), None)
 
   private def exists(spark: SparkSession, path: String): Boolean =
     genLog(path).exists(spark)
@@ -677,7 +677,7 @@ object ValidationLedger {
 
   /** Rewrite the committed generations as one (rows are already one per
     * partition — this coalesces FILES, not semantics). Atomic flip;
-    * superseded generations cool for `graft.ledger.gcGraceMs` (default
+    * superseded generations cool for `graft.store.gcGraceMs` (default
     * 15 min) before the sweep, so lock-free readers survive. */
   def compact(spark: SparkSession, path: String): Unit = {
     val lg = genLog(path)

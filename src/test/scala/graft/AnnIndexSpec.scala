@@ -338,7 +338,7 @@ class AnnIndexSpec extends SparkSpec {
     assert(exists("g10"), "fresh append adopted/collided with the orphan")
     val total = AnnStore.codes(spark, tmp).count()
     // compaction GCs the orphan immediately (never reader-visible) but
-    // keeps superseded gens cooling for graft.ann.gcGraceMs — safe
+    // keeps superseded gens cooling for graft.store.gcGraceMs — safe
     // against back-to-back compactions with in-flight serves
     AnnStore.compactCodes(spark, tmp)
     assert(!exists("g9"), "orphan not GC'd")
@@ -346,11 +346,11 @@ class AnnIndexSpec extends SparkSpec {
     assert(AnnStore.codes(spark, tmp).count() == total)
     AnnStore.compactCodes(spark, tmp)
     assert(exists("g0"), "back-to-back compaction swept a cooling gen")
-    spark.conf.set("graft.ann.gcGraceMs", "0")
+    spark.conf.set("graft.store.gcGraceMs", "0")
     try {
       AnnStore.compactCodes(spark, tmp)
       assert(!exists("g0"), "cooled-out grace copy not swept")
-    } finally spark.conf.unset("graft.ann.gcGraceMs")
+    } finally spark.conf.unset("graft.store.gcGraceMs")
     assert(AnnStore.codes(spark, tmp).count() == total)
   }
 
@@ -528,9 +528,9 @@ class AnnIndexSpec extends SparkSpec {
       "tombstoned rows must be physically absent from the compacted codes")
     // retired tombstone generations follow the cooling sweep: with the
     // grace window zeroed the SECOND compaction removes the dirs
-    spark.conf.set("graft.ann.gcGraceMs", "0")
+    spark.conf.set("graft.store.gcGraceMs", "0")
     try AnnStore.compactCodes(spark, tmp)
-    finally spark.conf.unset("graft.ann.gcGraceMs")
+    finally spark.conf.unset("graft.store.gcGraceMs")
     val tombsDir = java.nio.file.Paths.get(s"$tmp/v1/tombs")
     assert(!java.nio.file.Files.exists(tombsDir) ||
       !java.nio.file.Files.list(tombsDir).findAny().isPresent,
@@ -601,11 +601,11 @@ class AnnIndexSpec extends SparkSpec {
     }
     assert(codeGenDirs() > 0,
       "precondition: grace copies still cooling under the default window")
-    spark.conf.set("graft.ann.gcGraceMs", "0")
+    spark.conf.set("graft.store.gcGraceMs", "0")
     try {
       AnnStore.compactCodes(spark, tmp)
       assert(codeGenDirs() == 0,
         "cooled-out codes generations must sweep on an emptied store")
-    } finally spark.conf.unset("graft.ann.gcGraceMs")
+    } finally spark.conf.unset("graft.store.gcGraceMs")
   }
 }

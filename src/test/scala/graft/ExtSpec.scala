@@ -1051,6 +1051,29 @@ class ExtSpec extends SparkSpec {
       "published bucket counts disagree with the published rows")
   }
 
+  test("dedup: a MinHash store serve shingles each incoming row once") {
+    val docs = spark.range(200).select(col("id").as("doc_id"),
+      concat(lit("crawl page "), col("id"), lit(" on topic "),
+        (col("id") % 7).cast("string"), lit(" with the usual boilerplate")
+      ).as("text"))
+    val tmp = java.nio.file.Files.createTempDirectory("graft-mhonce").toString
+    Dedup.buildMinHashStore(docs, "doc_id", "text", tmp)
+    // a live retraction puts the serve in the window where the cap
+    // decision reads the incoming band keys twice, besides the candidate
+    // join and the verify
+    Dedup.retractFromMinHashStore(docs.filter(col("doc_id") < 5)
+      .select("doc_id"), "doc_id", tmp): Unit
+    val evals = spark.sparkContext.longAccumulator("incoming rows evaluated")
+    val seen = udf { (t: String) => evals.add(1L); t }.asNondeterministic()
+    val incoming = docs.filter(pmod(col("doc_id"), lit(4)) === 0)
+      .select((col("doc_id") + 1000L).as("doc_id"), seen(col("text")).as("text"))
+    val pairs = Dedup.minhashPairsAgainstStore(incoming, "doc_id", "text", tmp)
+      .collect()
+    assert(pairs.nonEmpty, "precondition: the re-crawls must match")
+    assert(evals.value == 50L,
+      s"50 incoming rows were evaluated ${evals.value} times in one serve")
+  }
+
   test("dedup: MinHash store build bounds each table's file count (r20 — wide-input builds must not fragment)") {
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text")
@@ -1075,6 +1098,16 @@ class ExtSpec extends SparkSpec {
       s"$tmp/wide").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     assert(stored == direct && direct.nonEmpty)
+  }
+
+  /** A MinHash store table across the generations its manifest lists —
+    * superseded generations stay on disk, cooling, after a compaction. */
+  private def minhashLiveTable(dir: String, table: String) = {
+    import scala.jdk.CollectionConverters._
+    new com.fasterxml.jackson.databind.ObjectMapper()
+      .readTree(graft.ext.StoreFiles.readUtf8(spark, s"$dir/manifest.json"))
+      .get("gens").elements().asScala.map(_.asText).toSeq
+      .map(g => spark.read.parquet(s"$dir/$table/$g")).reduce(_.unionByName(_))
   }
 
   test("dedup: MinHash store retraction — retracted docs stop matching instantly, compaction erases and heals counts") {
@@ -1110,13 +1143,13 @@ class ExtSpec extends SparkSpec {
     // rows/shingles physically scrubbed; counts recomputed from the
     // scrubbed rows (snapshot total == live row count)
     val doomedIds = doomed.select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(spark.read.parquet(s"$tmp/rows")
+    assert(minhashLiveTable(tmp, "rows")
       .filter(col("id").isin(doomedIds.toSeq: _*)).isEmpty)
-    assert(spark.read.parquet(s"$tmp/shingles")
+    assert(minhashLiveTable(tmp, "shingles")
       .filter(col("id").isin(doomedIds.toSeq: _*)).isEmpty)
-    val snapTotal = spark.read.parquet(s"$tmp/bucket_counts")
+    val snapTotal = minhashLiveTable(tmp, "bucket_counts")
       .agg(sum("n")).head().getLong(0)
-    assert(snapTotal == spark.read.parquet(s"$tmp/rows").count(),
+    assert(snapTotal == minhashLiveTable(tmp, "rows").count(),
       "healed count snapshot must equal the scrubbed row count")
 
     // tombstone retired: re-appending the retracted docs restores matches
@@ -1156,19 +1189,17 @@ class ExtSpec extends SparkSpec {
     def serve() = Dedup.minhashPairsAgainstStore(incoming, "doc_id", "text", tmp)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).sorted.toSeq
     val before = serve()
-    val filesBefore = Seq("bucket_counts", "rows", "shingles")
-      .map(d => graft.ext.StoreFiles.dataFileCount(spark, s"$tmp/$d")).sum
-    val deltasBefore = spark.read.parquet(s"$tmp/bucket_counts").count()
+    val filesBefore = Dedup.minhashStoreFileCount(spark, tmp)
+    val deltasBefore = minhashLiveTable(tmp, "bucket_counts").count()
     Dedup.compactMinHashStore(spark, tmp)
     val after = serve()
     assert(after == before && before.nonEmpty)
-    val filesAfter = Seq("bucket_counts", "rows", "shingles")
-      .map(d => graft.ext.StoreFiles.dataFileCount(spark, s"$tmp/$d")).sum
+    val filesAfter = Dedup.minhashStoreFileCount(spark, tmp)
     assert(filesAfter < filesBefore,
       s"compaction did not collapse files: $filesBefore -> $filesAfter")
     // count deltas merged into one snapshot row per (band, bucket)
-    val deltasAfter = spark.read.parquet(s"$tmp/bucket_counts").count()
-    val distinctBuckets = spark.read.parquet(s"$tmp/bucket_counts")
+    val deltasAfter = minhashLiveTable(tmp, "bucket_counts").count()
+    val distinctBuckets = minhashLiveTable(tmp, "bucket_counts")
       .select("band", "bucket").distinct().count()
     assert(deltasAfter == distinctBuckets && deltasAfter <= deltasBefore)
     // appends after compaction still work and still serve identically
@@ -1535,19 +1566,18 @@ class ExtSpec extends SparkSpec {
     }
     assert(Seq("postings", "dlen", "dfd").map(genDirs).sum > 0,
       "precondition: grace copies still cooling under the default window")
-    spark.conf.set("graft.bm25.gcGraceMs", "0")
+    spark.conf.set("graft.store.gcGraceMs", "0")
     try {
       Retrieval.compactIndex(spark, dir)
       assert(Seq("postings", "dlen", "dfd").map(genDirs).sum == 0,
         "cooled-out data generations must sweep on an emptied index")
-    } finally spark.conf.unset("graft.bm25.gcGraceMs")
+    } finally spark.conf.unset("graft.store.gcGraceMs")
   }
 
   test("dedup: MinHash tombstone stage orphans are invisible and swept") {
-    // the MinHash store has no manifest — readers LIST tombs/ — so the
-    // r15 stage→rename flip is what keeps a crashed (or check-refused)
-    // attempt from ever becoming a committed retraction: the stage dir
-    // is hidden to the recursive reader, and the next commit sweeps it
+    // a crashed (or check-refused) attempt's stage dir never becomes a
+    // committed retraction — no manifest lists it — and the next commit
+    // sweeps it
     val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
       .select("doc_id", "text").filter(col("doc_id") < 10)
     val dir = java.nio.file.Files.createTempDirectory("graft-mhstage").toString
@@ -1561,38 +1591,6 @@ class ExtSpec extends SparkSpec {
     val f = graft.ext.StoreFiles.fs(spark, dir)
     assert(!f.exists(new org.apache.hadoop.fs.Path(s"$dir/tombs/.stage-g44")),
       "the next commit must sweep the stale stage orphan")
-  }
-
-  test("dedup: MinHash retraction cap counts pre-generation flat tombstone files") {
-    // r15 review: a pre-r15 store carries its tombstones as FLAT parquet
-    // files under tombs/ (the old mode-append layout); the
-    // broadcast-small cap must count that mass — every serve reads it —
-    // not just the r15 generation dirs
-    val docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
-      .select("doc_id", "text").filter(col("doc_id") < 20)
-    val dir = java.nio.file.Files.createTempDirectory("graft-mhlegacy").toString
-    graft.ext.Dedup.buildMinHashStore(docs, "doc_id", "text", dir)
-    // plant the legacy layout: 8 flat tombstone rows directly under tombs/
-    docs.filter(col("doc_id") < 8).select(col("doc_id").as("id"))
-      .coalesce(1).write.mode("append").parquet(s"$dir/tombs")
-    assert(graft.ext.Dedup.minhashRetractionCount(spark, dir) == 8L,
-      "legacy flat tombstones must serve")
-    spark.conf.set("graft.minhash.maxTombstones", "10")
-    try {
-      // 8 legacy + 4 new = 12 > 10: must refuse, counting the flat mass
-      val e = intercept[RuntimeException](graft.ext.Dedup
-        .retractFromMinHashStore(docs.filter(col("doc_id") >= 8 &&
-          col("doc_id") < 12).select("doc_id"), "doc_id", dir))
-      assert(e.getMessage.contains("graft.minhash.maxTombstones"))
-      assert(graft.ext.Dedup.minhashRetractionCount(spark, dir) == 8L,
-        "a refused retraction must leave the store unchanged")
-      // 8 + 2 = 10 <= 10: commits; disjoint ids, so 10 serve
-      assert(graft.ext.Dedup.retractFromMinHashStore(
-        docs.filter(col("doc_id") >= 8 && col("doc_id") < 10)
-          .select("doc_id"), "doc_id", dir) == 2L)
-      assert(graft.ext.Dedup.minhashRetractionCount(spark, dir) == 10L,
-        "flat + generation tombstones must serve together")
-    } finally spark.conf.unset("graft.minhash.maxTombstones")
   }
 
   test("dedup: MinHash store serve stays exact when a bucket straddles the cap between retraction and compaction") {
@@ -1754,7 +1752,7 @@ class ExtSpec extends SparkSpec {
     // compact GCs the orphan IMMEDIATELY (it was never reader-visible)
     // but puts the generations it just superseded on a COOLING ledger —
     // an in-flight serve planned against a recent manifest keeps its
-    // files for at least graft.bm25.gcGraceMs (r11: even across
+    // files for at least graft.store.gcGraceMs (r11: even across
     // back-to-back compactions, which compactIndexIfNeeded can legally
     // run — the age gate, not the compaction count, drives the sweep)
     graft.ext.Retrieval.compactIndex(spark, dir)
@@ -1766,12 +1764,12 @@ class ExtSpec extends SparkSpec {
     assert(f.exists(new Path(s"$dir/postings/g0")),
       "back-to-back compaction swept a still-cooling grace copy")
     // grace 0 = the plain one-compaction deferral: the next compact sweeps
-    spark.conf.set("graft.bm25.gcGraceMs", "0")
+    spark.conf.set("graft.store.gcGraceMs", "0")
     try {
       graft.ext.Retrieval.compactIndex(spark, dir)
       assert(!f.exists(new Path(s"$dir/postings/g0")),
         "cooled-out grace copy not swept")
-    } finally spark.conf.unset("graft.bm25.gcGraceMs")
+    } finally spark.conf.unset("graft.store.gcGraceMs")
     // tampered counters: reconcile refuses to compact
     val manifest = graft.ext.StoreFiles.readUtf8(spark, s"$dir/manifest.json")
     val bad = manifest.replaceAll("\"n_docs\":\\d+", "\"n_docs\":1")

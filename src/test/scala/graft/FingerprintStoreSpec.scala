@@ -117,9 +117,9 @@ class FingerprintStoreSpec extends SparkSpec {
     assert(FingerprintStore.liveFileCount(spark, dir) < filesBefore,
       "compaction did not collapse fps files")
     // superseded generations cool for the grace window, then sweep
-    spark.conf.set("graft.fpstore.gcGraceMs", "0")
+    spark.conf.set("graft.store.gcGraceMs", "0")
     try FingerprintStore.compact(spark, dir)
-    finally spark.conf.unset("graft.fpstore.gcGraceMs")
+    finally spark.conf.unset("graft.store.gcGraceMs")
     assert(scrubbed() == before)
     // appends after compaction still merge into the rebuilt filter
     FingerprintStore.append(Seq((400L, "post compact batch")).toDF("doc_id", "text"),
@@ -240,11 +240,11 @@ class FingerprintStoreSpec extends SparkSpec {
     // compaction: physical erasure + filter heal + retirement. Grace 0 +
     // a second compaction sweeps the superseded generations, so the glob
     // below counts exactly the live rows.
-    spark.conf.set("graft.fpstore.gcGraceMs", "0")
+    spark.conf.set("graft.store.gcGraceMs", "0")
     try {
       FingerprintStore.compact(spark, dir)
       FingerprintStore.compact(spark, dir)
-    } finally spark.conf.unset("graft.fpstore.gcGraceMs")
+    } finally spark.conf.unset("graft.store.gcGraceMs")
     assert(FingerprintStore.retractionCount(spark, dir) == 0L)
     assert(kept() == Seq(10L, 12L))
     // corpus had 3 distinct fps; one retracted → 2 distinct physically

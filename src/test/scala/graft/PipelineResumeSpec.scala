@@ -321,41 +321,10 @@ class PipelineResumeSpec extends SparkSpec {
   }
 
   test("streamed retracts, crash-before-mark window: resume must not double tombstones or unmask (r16 review)") {
-    // MinHash: the tombstone generation is VISIBLE (directory-listed
-    // store — the rename IS the publish) but the mark never advanced.
-    // The resume must detect the visible generation and only advance the
-    // mark — re-running the commit would delete-then-rewrite the live
-    // generation, transiently UNMASKING the committed tombstones for
-    // lock-free serves.
-    val mhDir = tmp()
-    Dedup.buildMinHashStore(hist, "doc_id", "text", mhDir,
-      shingleK = 3, numHashes = 16, bands = 4)
-    val tIds = takedownDocs.select("doc_id")
-    val nT = tIds.count()
-    assert(Dedup.retractBatchFromMinHashStore(tIds, "doc_id", mhDir,
-      "td", 0L) == nT)
-    // simulate the crash: generation committed, mark rewound (per-tag
-    // marks-<tag>.json since r17)
-    StoreFiles.writeLongMarks(spark, s"$mhDir/marks-td.json",
-      "graft-minhash-marks", Map.empty)
-    val genPath = new org.apache.hadoop.fs.Path(s"$mhDir/tombs/td-b0")
-    val f = StoreFiles.fs(spark, mhDir)
-    val modBefore = f.getFileStatus(genPath).getModificationTime
-    assert(Dedup.retractBatchFromMinHashStore(tIds, "doc_id", mhDir,
-      "td", 0L) == nT, "resume must report the committed rows")
-    assert(f.getFileStatus(genPath).getModificationTime == modBefore,
-      "resume must not rewrite the visible generation (the " +
-        "delete-then-rename reclaim would transiently unmask it)")
-    assert(Dedup.minhashRetractionCount(spark, mhDir) == nT,
-      "tombstones must not double")
-    // ...and the mark is now in place: a true redelivery no-ops
-    assert(Dedup.retractBatchFromMinHashStore(tIds, "doc_id", mhDir,
-      "td", 0L) == 0L)
-
-    // fingerprint store (manifest-governed): the crash window leaves an
-    // ORPHAN generation on disk that no reader ever saw (visibility is
-    // the manifest flip) — the resume reclaims it and commits exactly
-    // once
+    // the crash window leaves an ORPHAN generation on disk that no reader
+    // ever saw (visibility is the manifest flip) — the resume reclaims it
+    // and commits exactly once (every window of the MinHash store's
+    // commits: MinHashStoreLogSpec)
     val fpDir = tmp()
     FingerprintStore.build(hist, "text", fpDir)
     val nFp = FingerprintStore.retractBatch(takedownDocs, "text", fpDir,
@@ -468,7 +437,7 @@ class PipelineResumeSpec extends SparkSpec {
     assert(pairs() == before, "cadence compaction must not change serves")
   }
 
-  test("minhash streamed append: exactly-once under redelivery; resume fills only the missing tables (r16)") {
+  test("minhash streamed append: exactly-once under redelivery; serves as a one-shot build before and after compaction (r16)") {
     val dir = tmp()
     Dedup.buildMinHashStore(hist, "doc_id", "text", dir,
       shingleK = 3, numHashes = 16, bands = 4)
@@ -495,69 +464,16 @@ class PipelineResumeSpec extends SparkSpec {
       .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
     assert(pairs(dir) == pairs(oneShot),
       "streamed-append store must serve identically to a one-shot build")
-    // crash window: a batch whose rows/bucket_counts tables never landed
-    // (simulated by deleting them) is healed by the redelivery — the
-    // tables re-derive from the persisted shingles generation
     val b2 = mkDocs(3000L, 3010L)
     assert(Dedup.appendBatchToMinHashStore(b2, "doc_id", "text", dir,
       "s1", 1L))
-    val full = rowsCnt
-    val f = StoreFiles.fs(spark, dir)
-    f.delete(new org.apache.hadoop.fs.Path(s"$dir/rows/s1-b1"), true)
-    f.delete(new org.apache.hadoop.fs.Path(s"$dir/bucket_counts/s1-b1"), true)
-    // rewind the mark to simulate the crash-before-mark window (per-tag
-    // marks-<tag>.json since r17 — the shared marks.json is legacy)
-    val marksP = s"$dir/marks-s1.json"
-    StoreFiles.writeUtf8Atomic(spark, marksP,
-      """{"format":"graft-minhash-marks","marks":{"s1":0}}""")
-    assert(rowsCnt < full)
-    assert(Dedup.appendBatchToMinHashStore(b2, "doc_id", "text", dir,
-      "s1", 1L))
-    assert(rowsCnt == full, "resume must re-derive the missing tables")
-    // compaction flattens the generations and serves identically
+    // compaction collapses the generations and serves identically
     Dedup.compactMinHashStore(spark, dir)
     val oneShot2 = tmp()
     Dedup.buildMinHashStore(hist.unionByName(batch).unionByName(b2),
       "doc_id", "text", oneShot2, shingleK = 3, numHashes = 16, bands = 4)
     assert(pairs(dir) == pairs(oneShot2),
       "compacted streamed store must serve identically to a fresh build")
-  }
-
-  test("minhash streamed append, asymmetric crash window: rows visible + counts missing resumes counts ONLY (r20 staging overlap)") {
-    // r20 overlaps the rows/bucket_counts STAGE writes but publishes in
-    // the fixed rows → counts order; this pins the resume behavior of
-    // the one crash window that order guarantees can exist (rows
-    // published, counts not) — the resume must re-publish ONLY counts
-    // and must not touch the visible rows generation.
-    val dir = tmp()
-    Dedup.buildMinHashStore(hist, "doc_id", "text", dir,
-      shingleK = 3, numHashes = 16, bands = 4)
-    val b = mkDocs(5000L, 5015L)
-    assert(Dedup.appendBatchToMinHashStore(b, "doc_id", "text", dir,
-      "s9", 0L))
-    val f = StoreFiles.fs(spark, dir)
-    val rowsGen = new org.apache.hadoop.fs.Path(s"$dir/rows/s9-b0")
-    val rowsModBefore = f.getFileStatus(rowsGen).getModificationTime
-    // simulate the crash: counts generation never published, mark not
-    // advanced
-    f.delete(new org.apache.hadoop.fs.Path(s"$dir/bucket_counts/s9-b0"), true)
-    StoreFiles.writeUtf8Atomic(spark, s"$dir/marks-s9.json",
-      """{"format":"graft-minhash-marks","marks":{}}""")
-    assert(Dedup.appendBatchToMinHashStore(b, "doc_id", "text", dir,
-      "s9", 0L))
-    assert(f.exists(new org.apache.hadoop.fs.Path(s"$dir/bucket_counts/s9-b0")),
-      "resume must publish the missing counts generation")
-    assert(f.getFileStatus(rowsGen).getModificationTime == rowsModBefore,
-      "resume must not re-publish the already-visible rows generation")
-    // the healed store serves identically to a one-shot build
-    val oneShot = tmp()
-    Dedup.buildMinHashStore(hist.unionByName(b), "doc_id", "text",
-      oneShot, shingleK = 3, numHashes = 16, bands = 4)
-    val probe = mkDocs(5000L, 5020L)
-    def pairs(p: String) = Dedup.minhashPairsAgainstStore(
-      probe, "doc_id", "text", p).collect()
-      .map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
-    assert(pairs(dir) == pairs(oneShot))
   }
 
   test("streamed staging lifecycle end-to-end: stage → append → retire-previous-at-batch-start through a real file-source stream (r17)") {
@@ -658,37 +574,21 @@ class PipelineResumeSpec extends SparkSpec {
       e1.getMessage)
   }
 
-  test("minhash marks are per-tag files: append + takedown tags never race each other's marks; legacy marks.json adopts read-only (r17 advice)") {
+  test("minhash marks: an append tag and a takedown tag keep their marks in one manifest") {
     val dir = tmp()
     Dedup.buildMinHashStore(hist, "doc_id", "text", dir,
       shingleK = 3, numHashes = 16, bands = 4)
-    val f = StoreFiles.fs(spark, dir)
-    // legacy store: a pre-r17 shared marks.json carries both tags' marks
-    StoreFiles.writeUtf8Atomic(spark, s"$dir/marks.json",
-      """{"format":"graft-minhash-marks","marks":{"app":3,"td":5}}""")
-    // both tags' marks are honored from the legacy file (fallback read)
-    assert(!Dedup.appendBatchToMinHashStore(mkDocs(1000L, 1010L),
-      "doc_id", "text", dir, "app", 3L), "legacy append mark must hold")
-    assert(Dedup.retractBatchFromMinHashStore(
-      spark.range(1).select(col("id").as("doc_id")), "doc_id", dir,
-      "td", 5L) == 0L, "legacy takedown mark must hold")
-    // new commits write per-tag files and never touch marks.json — the
-    // exact lost-update the shared file risked (append stream and
-    // takedown stream committing concurrently, one read-modify-write
-    // clobbering the other's entry) is structurally gone
-    val legacyBytes = StoreFiles.readUtf8(spark, s"$dir/marks.json")
     assert(Dedup.appendBatchToMinHashStore(mkDocs(1000L, 1010L),
       "doc_id", "text", dir, "app", 4L))
     assert(Dedup.retractBatchFromMinHashStore(
       mkDocs(1000L, 1002L).select(col("doc_id")), "doc_id", dir,
-      "td", 6L) > 0L)
-    assert(f.exists(new org.apache.hadoop.fs.Path(s"$dir/marks-app.json")))
-    assert(f.exists(new org.apache.hadoop.fs.Path(s"$dir/marks-td.json")))
-    assert(StoreFiles.readUtf8(spark, s"$dir/marks.json") == legacyBytes,
-      "commits must never rewrite the legacy shared marks.json")
-    // the per-tag file takes precedence over the stale legacy entry
+      "td", 6L) == 2L)
+    // both commits folded their mark into the one manifest: neither
+    // replace lost the other tag's entry
+    assert(StoreFiles.readUtf8(spark, s"$dir/manifest.json")
+      .contains("\"marks\":{\"app\":4,\"td\":6}"))
     assert(!Dedup.appendBatchToMinHashStore(mkDocs(1000L, 1010L),
-      "doc_id", "text", dir, "app", 4L), "per-tag mark must win")
+      "doc_id", "text", dir, "app", 4L))
     assert(Dedup.retractBatchFromMinHashStore(
       mkDocs(1000L, 1002L).select(col("doc_id")), "doc_id", dir,
       "td", 6L) == 0L)

@@ -388,9 +388,9 @@ class ValidationLedgerSpec extends SparkSpec {
     ValidationLedger.rows(spark, dir).limit(1)
       .write.parquet(s"$dir/rows/g99")
     assert(ValidationLedger.rows(spark, dir).count() == 4)
-    spark.conf.set("graft.ledger.gcGraceMs", "0")
+    spark.conf.set("graft.store.gcGraceMs", "0")
     try ValidationLedger.compact(spark, dir)
-    finally spark.conf.unset("graft.ledger.gcGraceMs")
+    finally spark.conf.unset("graft.store.gcGraceMs")
     val after = ValidationLedger.rows(spark, dir).orderBy("partition")
       .collect().map(_.toString).toSeq
     assert(after == before)
@@ -401,9 +401,9 @@ class ValidationLedgerSpec extends SparkSpec {
       .filterNot(_.startsWith(".")).toSeq.sorted
     val l1 = live()
     assert(!l1.contains("g99") && l1.length == 3, l1.mkString(","))
-    spark.conf.set("graft.ledger.gcGraceMs", "0")
+    spark.conf.set("graft.store.gcGraceMs", "0")
     try ValidationLedger.compact(spark, dir)
-    finally spark.conf.unset("graft.ledger.gcGraceMs")
+    finally spark.conf.unset("graft.store.gcGraceMs")
     val l2 = live()
     assert(l2.length == 2 && !l2.exists(Set("g0", "g1", "g99")),
       l2.mkString(","))
